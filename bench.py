@@ -464,9 +464,9 @@ def main() -> None:
         # Sized to the bench data, not the core count: at sf0.1 every
         # shuffle is < a few MB, so task-scheduling overhead dominates
         # wall time (measured: a warm 260k-row groupBy is 0.3s at 8
-        # partitions vs 1.4s at 64).  AQE's size-based coalescing
-        # (parallelismFirst=false in build_session) keeps the same
-        # plans correct when the input is 1000× bigger.
+        # partitions vs 1.4s at 64).  AQE's coalescing (Spark's default
+        # parallelismFirst=true in build_session) keeps the same plans
+        # correct when the input is 1000× bigger.
         shuffle_partitions=int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "8")),
     )
     spark.sparkContext.setLogLevel("ERROR")

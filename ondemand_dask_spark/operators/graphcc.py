@@ -1,11 +1,14 @@
-"""Connected components by large-star/small-star contraction.
+"""Connected components: large-star/small-star contraction and
+min-label propagation.
 
-The reusable operator behind `dedup_cc_star_contraction` (see that
-query's docstring for the algorithm account; Kiveris et al.,
-"Connected Components in MapReduce and Beyond").  Exposed separately
-so arbitrary edge sets — not just the minhash pair graph — can use
-it, and so property tests can drive it over adversarial topologies
-(chains) where plain min-label propagation would need O(n) rounds.
+`connected_components_star` is the reusable operator behind
+`dedup_cc_star_contraction` (see that query's docstring for the
+algorithm account; Kiveris et al., "Connected Components in MapReduce
+and Beyond"); `connected_components_minlabel` is the one behind
+`dedup_connected_components`.  Both are exposed separately so
+arbitrary edge sets — not just the minhash pair graph — can use them,
+and so property tests can drive them over adversarial topologies
+(chains, where min-label propagation needs O(n) rounds).
 
 Round structure: each large-star and small-star step is one
 groupBy(min) plus one equi-join — two exchanges — and every round's
@@ -16,7 +19,9 @@ checkpoint blocks — see operators/checkpoint.py).  Convergence is
 detected from a two-scalar (count, hash-sum) edge-set checksum; the
 driver never sees data rows; exhausting `max_rounds` without
 reaching the fixpoint RAISES rather than returning a silently
-non-star (wrong) labeling.
+non-star (wrong) labeling.  Min-label propagation keeps the same
+discipline: one checkpoint per round, a scalar changed-count probe,
+and a raise when its round budget runs out before the fixpoint.
 """
 
 from __future__ import annotations
@@ -145,3 +150,87 @@ def connected_components_star(
         ).distinct()
     )
     return labels, cur_edges
+
+
+def connected_components_minlabel(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    max_rounds: int = 10,
+    stats: dict | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Labels for the graph `edges[(src, dst)]` by min-label
+    propagation: each round every node takes the minimum label among
+    itself and its neighbours, until no label drops.
+
+    Returns (labels, handle): labels is (node, cluster_id) over every
+    node incident to an edge, cluster_id = component minimum; handle
+    is the final round's checkpoint, whose blocks labels' plan reads —
+    the CALLER owns its lifetime (release via
+    release_local_checkpoint once the labels materialize).
+
+    `max_rounds` budgets label-update rounds, round 1 included; a
+    fixpoint shows as a round that changes no label, so a component
+    of diameter d needs d + 1 rounds.  Exhausting the budget RAISES
+    rather than returning unconverged labels.
+
+    Round 1 is folded into the edge build: every label starts as the
+    node itself, so it is least(node, min neighbour) straight off the
+    symmetric edges, and it always changes a label when an edge joins
+    two distinct nodes — no identity-label frame and no probe."""
+    both_ways = F.array(
+        F.struct(F.col(src).alias("src"), F.col(dst).alias("dst")),
+        F.struct(F.col(dst).alias("src"), F.col(src).alias("dst")),
+    )
+    sym = (
+        edges.select(F.explode(both_ways).alias("e"))
+        .select("e.src", "e.dst")
+        .localCheckpoint()
+    )
+    ckpt = (
+        sym.groupBy("src")
+        .agg(F.least(F.col("src"), F.min("dst")).alias("lbl"))
+        .select(F.col("src").alias("node"), "lbl")
+        .localCheckpoint()
+    )
+    rounds = 1
+    converged = False
+    while rounds < max_rounds:
+        labels = ckpt.select("node", "lbl")
+        # The probe CARRIES the previous label through the min-aggregate
+        # (own rows tag it, neighbour rows contribute NULL, max()
+        # recovers it — each node owns exactly one row), so `changed`
+        # filters the fresh checkpoint instead of joining it back
+        # against the previous round.
+        prop = sym.join(labels, sym["src"] == F.col("node")).select(
+            F.col("dst").alias("node"), F.col("lbl").alias("cand")
+        )
+        own = labels.select(
+            "node", F.col("lbl").alias("cand"), F.col("lbl").alias("old")
+        )
+        new_ckpt = (
+            own.unionByName(prop.withColumn("old", F.lit(None).cast("long")))
+            .groupBy("node")
+            .agg(F.min("cand").alias("lbl"), F.max("old").alias("old"))
+            .localCheckpoint()
+        )
+        changed = new_ckpt.filter(F.col("lbl") < F.col("old")).count()
+        rounds += 1
+        # each localCheckpoint is eager: the superseded round's blocks
+        # are released as soon as the new round's exist
+        release_local_checkpoint(ckpt)
+        ckpt = new_ckpt
+        if changed == 0:
+            converged = True
+            break
+    release_local_checkpoint(sym)
+    if stats is not None:
+        stats["rounds"] = rounds
+    if not converged:
+        release_local_checkpoint(ckpt)
+        raise RuntimeError(
+            f"min-label propagation did not converge within {max_rounds} "
+            "rounds (rounds needed = component diameter + 1; raise "
+            "max_rounds or use connected_components_star)"
+        )
+    return ckpt.select("node", F.col("lbl").alias("cluster_id")), ckpt

@@ -5,8 +5,9 @@ every variant here is designed around its shuffle profile:
 
 - exact:        one hash-groupBy (single shuffle on the digest);
 - MinHash+LSH:  shingle fan-out is a narrow op; the only shuffles are
-                groupBy(doc, seed) for signatures and the band-bucket
-                self-join — candidate pairs ∝ collisions, never n²;
+                one groupBy(doc) for shingle set + signature, one
+                groupBy(band, sig) for the buckets and the pair
+                distinct — candidate pairs ∝ collisions, never n²;
 - SimHash:      narrow bit fan-out + one groupBy; pairing is blocked;
 - n-gram Jaccard: pairwise by construction → blocked on (lang) so the
                 join is per-block; at scale block on (lang, length
@@ -16,7 +17,7 @@ Cross-engine determinism: all hashes derive from md5 (the one strong
 hash both Spark and DuckDB share) — the top 15 hex chars parsed as a
 60-bit integer: Spark `conv(substring(md5(x),1,15),16,10)` ≡ DuckDB
 `CAST('0x'||substr(md5(x),1,15) AS BIGINT)`.  Every query here is
-therefore fully oracle-checked, including the LSH band joins (unusual:
+therefore fully oracle-checked, including the LSH band buckets (unusual:
 most LSH tests are probabilistic; ours are exact because the "random"
 hash family is the same deterministic function on both engines).
 """
@@ -39,6 +40,10 @@ from ondemand_dask_spark.functions.texthash import (
 )
 from ondemand_dask_spark.io import load_table
 from ondemand_dask_spark.operators.checkpoint import RetainedCaches
+from ondemand_dask_spark.operators.graphcc import (
+    connected_components_minlabel,
+    connected_components_star,
+)
 from ondemand_dask_spark.registry import register
 
 _R = 4
@@ -62,41 +67,19 @@ _H_SQL = "CAST('0x' || substr(md5({x}), 1, 15) AS BIGINT)"
 # of them.
 _CACHES = RetainedCaches()
 
-# Verification-join strategy for dedup_minhash_lsh.  'full' (the
-# default) feeds the candidate pairs straight into the verification
-# join: cand is collision-bounded and tiny, so AQE broadcasts it and
-# the cached shingle set is probed IN PLACE — zero extra stages, sh
-# never shuffles.  A/B (tools/ab_minhash.py, one warm session, idle
-# machine, sf0.1, best-of-3): full 2.72s vs broadcast-semi 4.50s vs
-# shuffle-semi 4.40s — the r3 semi-filter variants pay a blocking
-# materialization of cand plus two stages for a row reduction the
-# inner join already performs.  'shuffle' is the degradation path
-# when a pathological corpus makes cand too big to broadcast: the
-# left-semi pre-join cuts the sh shuffle volume to candidate docs
-# before the pairwise intersect has to exchange anything.
-_VERIFY_MODE = "full"
-
-
 _evict_retained = _CACHES.evict
 _retain = _CACHES.retain
 
 
-def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct 3-token shingles per doc: (doc_id, shingle)."""
-    d = load_table(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id", F.explode(_shingle_array(F.col("text"), 3)).alias("shingle")
-    ).distinct()
-
-
-def _hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct 30-bit-hashed shingles per doc: (doc_id, h) — both
-    longs, so every downstream shuffle moves 16-byte rows instead of
-    shingle strings.  Distinct-by-hash ∘ distinct-by-string ≡
-    distinct-by-hash, so hashing BEFORE the distinct keeps the only
-    wide op narrow too.  Jaccard over hashed sets equals Jaccard
-    over shingles modulo hash collisions, and the DuckDB oracles
-    hash identically, so differential checks stay exact."""
+def _minhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The per-document MinHash table: one row per doc with at least
+    one 3-token shingle, (doc_id, hs, mh0..mh{NUM_HASHES-1}).  `hs` is
+    the doc's set of 30-bit shingle hashes and `mh{s}` its minimum
+    under the s-th affine hash.  One groupBy(doc_id) over the shingle
+    explode yields both, so the only wide op moves (long, long) rows
+    and never shingle strings.  Jaccard over hashed sets equals
+    Jaccard over shingles modulo hash collisions, and the DuckDB
+    oracles hash identically, so differential checks stay exact."""
     d = load_table(spark, sf_dir, "documents")
     h30 = _h(F.col("shingle")) % F.lit(1_073_741_824)
     return (
@@ -104,8 +87,67 @@ def _hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", F.explode(_shingle_array(F.col("text"), 3)).alias("shingle")
         )
         .select("doc_id", h30.alias("h"))
+        .groupBy("doc_id")
+        .agg(
+            F.collect_set("h").alias("hs"),
+            *[
+                F.min(
+                    (F.lit(_MH_A[s]) * F.col("h") + F.lit(_MH_B[s])) % F.lit(_MH_P)
+                ).alias(f"mh{s}")
+                for s in range(NUM_HASHES)
+            ],
+        )
+    )
+
+
+def _lsh_candidates(docs: DataFrame) -> DataFrame:
+    """Distinct (doc_a < doc_b) pairs that share a full band signature
+    in `docs` (a `_minhash_docs` frame).  Each doc explodes into its
+    NUM_HASHES // BAND_ROWS (band, signature) bucket keys, one
+    groupBy gathers each bucket's sorted doc list, and the in-bucket
+    pairs explode from it (the combination shape of
+    `_ngram_pair_scores`) — pairs ∝ bucket collisions, never n²."""
+    keys = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.col(f"mh{b * BAND_ROWS}").alias("s0"),
+                F.col(f"mh{b * BAND_ROWS + 1}").alias("s1"),
+            )
+            for b in range(NUM_HASHES // BAND_ROWS)
+        ]
+    )
+    combos = F.flatten(
+        F.transform(
+            F.col("ds"),
+            lambda x, i: F.transform(
+                F.slice(F.col("ds"), i + F.lit(2), F.size(F.col("ds"))),
+                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
+            ),
+        )
+    )
+    return (
+        docs.select("doc_id", F.explode(keys).alias("k"))
+        .groupBy("k")
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
+        .filter(F.size("ds") >= 2)
+        .select(F.explode(combos).alias("p"))
+        .select("p.doc_a", "p.doc_b")
         .distinct()
     )
+
+
+def _with_docs(cand: DataFrame, docs: DataFrame) -> DataFrame:
+    """`cand` (doc_a, doc_b) with each side's `docs` row attached as the
+    struct columns `a` and `b` (a.hs, a.mh0, ...)."""
+
+    def side(t: str) -> DataFrame:
+        rest = [c for c in docs.columns if c != "doc_id"]
+        return docs.select(
+            F.col("doc_id").alias(f"doc_{t}"), F.struct(*rest).alias(t)
+        )
+
+    return cand.join(side("a"), "doc_a").join(side("b"), "doc_b")
 
 
 _SHINGLES_SQL = """
@@ -189,106 +231,29 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets → candidate pairs → exact-Jaccard verification at
     JACCARD_THRESHOLD.
 
-    The LSH property: only pairs sharing a full band signature are
-    ever joined, so the self-join is on (band, sig) — collisions, not
-    n².  Verification joins only the candidate set.  This is the
-    scale path for fuzzy dedup (pyspark.ml's MinHashLSH does the
-    same; hand-rolled here so the hash family is cross-engine
-    deterministic and the whole pipeline oracle-checks exactly).
+    The LSH property: only docs sharing a full band signature ever
+    meet — they are grouped into one (band, sig) bucket and paired
+    there, so candidates ∝ collisions, not n².  Verification reads
+    only the candidate set.  This is the scale path for fuzzy dedup
+    (pyspark.ml's MinHashLSH does the same; hand-rolled here so the
+    hash family is cross-engine deterministic and the whole pipeline
+    oracle-checks exactly).
+
+    Plan: one cached per-doc table (`_minhash_docs`: shingle-hash set
+    plus signature) feeds the bucket grouping and both verification
+    joins, and the intersection is an array op on the joined row —
+    three exchanges in all (per-doc groupBy, bucket groupBy, pair
+    distinct; pinned in tests/test_plans.py).  A/B against the
+    earlier band-union self-join shape: CHANGES.md.
     """
-    # Hash shingles to 30-bit ids at the scan and never carry strings:
-    # the cached set / verification shuffles move (long, long) rows.
-    # Jaccard over hashed sets == Jaccard over shingles modulo hash
-    # collisions, and the oracle hashes identically, so the
-    # differential check stays exact.  Note: NOT built on _shingles()
-    # — that helper distincts on the shingle STRING, which would be a
-    # second (wider) shuffle; dedup over the hash alone is equivalent
-    # (distinct-by-hash ∘ distinct-by-string ≡ distinct-by-hash) and
-    # keeps the only wide op on (long, long) rows.
     _evict_retained()
-    sh = _retain(_hashed_shingles(spark, sf_dir).cache())
-    # mh is one row per doc (tiny) but sits under a 4-way band union
-    # that feeds a self-join — cache it or the shingle scan + groupBy
-    # lineage re-executes 8×.
-    mh = _retain(
-        sh.groupBy("doc_id")
-        .agg(
-            *[
-                F.min(
-                    (F.lit(_MH_A[s]) * F.col("h") + F.lit(_MH_B[s])) % F.lit(_MH_P)
-                ).alias(f"mh{s}")
-                for s in range(NUM_HASHES)
-            ]
-        )
-        .cache()
-    )
-    sig = None
-    for b in range(NUM_HASHES // BAND_ROWS):
-        part = mh.select(
-            "doc_id",
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                ",",
-                F.col(f"mh{b * BAND_ROWS}").cast("string"),
-                F.col(f"mh{b * BAND_ROWS + 1}").cast("string"),
-            ).alias("sig"),
-        )
-        sig = part if sig is None else sig.unionByName(part)
-    a, b = sig.alias("a"), sig.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-        .cache()  # referenced 3x below (id set twice + the pair join)
-    )
-    _retain(cand)
-    # Verification: the inner join against `cand` already restricts
-    # work to docs that collided, and with cand broadcast (AQE does
-    # this whenever it fits — the normal LSH case) the cached shingle
-    # set is probed without shuffling at all, so the default adds NO
-    # pre-filter.  The semi-filter modes below exist for corpora
-    # whose candidate set overflows the broadcast threshold: there
-    # the pairwise intersect would hash-exchange the full shingle
-    # table twice, and pre-shrinking sh to candidate docs (one
-    # left-semi join) bounds that shuffle.  See _VERIFY_MODE.
-    cand_docs = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    if _VERIFY_MODE == "broadcast":
-        sh_c = sh.join(F.broadcast(cand_docs), "doc_id")
-    elif _VERIFY_MODE == "shuffle":
-        sh_c = sh.join(cand_docs, "doc_id", "left_semi")
-    else:  # "full": no semi-filter (the pre-r3 shape, kept for A/B)
-        sh_c = sh
-    # counts are only consumed for candidate docs, so computing them on
-    # the filtered set is identical and far smaller.
-    counts = sh_c.groupBy("doc_id").agg(F.count("*").alias("n"))
-    x, y = sh_c.alias("x"), sh_c.alias("y")
-    inter = (
-        cand.join(x, F.col("x.doc_id") == F.col("doc_a"))
-        .join(
-            y,
-            (F.col("y.doc_id") == F.col("doc_b"))
-            & (F.col("y.h") == F.col("x.h")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("i"))
-    )
-    jac = F.col("i").cast("double") / (F.col("na.n") + F.col("nb.n") - F.col("i"))
+    docs = _retain(_minhash_docs(spark, sf_dir).cache())
+    i = F.size(F.array_intersect("a.hs", "b.hs"))
+    jac = i.cast("double") / (F.size("a.hs") + F.size("b.hs") - i)
     return (
-        inter.join(counts.alias("na"), F.col("na.doc_id") == F.col("doc_a"))
-        .join(counts.alias("nb"), F.col("nb.doc_id") == F.col("doc_b"))
+        _with_docs(_lsh_candidates(docs), docs)
         .filter(jac >= JACCARD_THRESHOLD)
-        .select(
-            "doc_a", "doc_b", F.round(jac - 1e-9, _R).alias("jaccard")
-        )
+        .select("doc_a", "doc_b", F.round(jac - 1e-9, _R).alias("jaccard"))
     )
 
 
@@ -834,101 +799,30 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     tree (measured: flat ~0.5s/round).  On a production cluster use
     `checkpoint()` against a reliable dir instead — same truncation,
     plus executor-loss recovery for long jobs.
-    Rounds needed = component diameter (dup clusters are near-cliques
-    → 2-3); at 100 TB swap min-propagation for the large-star/
-    small-star alternation (Kiveris et al., "Connected Components in
+    Rounds needed = component diameter + 1 (dup clusters are
+    near-cliques → 2-3), within a budget of 10 that raises when
+    exhausted (`operators.graphcc.connected_components_minlabel`); at
+    100 TB swap min-propagation for the large-star/small-star
+    alternation (Kiveris et al., "Connected Components in
     MapReduce"), which converges in O(log n) rounds on path-shaped
     graphs — the per-round plan here is unchanged.
+
+    The pair list is read exactly once, by the symmetric-edge
+    explode that the operator checkpoints, so it needs no cache of
+    its own; round 1 comes straight off those edges (A/B against the
+    earlier cached-pairs + identity-label prologue: CHANGES.md).
 
     The DuckDB oracle computes the same fixpoint as a recursive CTE —
     exact differential proof that an ITERATIVE DataFrame algorithm
     terminates at the right answer."""
-    # cache the pair list BEFORE the symmetrizing union: the union
-    # references `pairs` twice, and without the cache the entire
-    # minhash pipeline (shingle scan, band self-join, verification
-    # join) executes once per reference.
-    # (dedup_minhash_lsh's entry evicted the PREVIOUS query's retained
-    # caches; `pairs` joins this call's retained set below.)
-    pairs = _retain(
-        dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b").cache()
+    labels, ckpt = connected_components_minlabel(
+        dedup_minhash_lsh(spark, sf_dir), "doc_a", "doc_b"
     )
-    # Populate the cache EAGERLY: the union below consumes `pairs`
-    # from two branches inside one (eager-checkpoint) job, and a lazy
-    # cache makes it a scheduler accident whether the second branch
-    # hits warm blocks or re-runs the whole minhash pipeline —
-    # measured bimodal 2.7 s vs 5.7 s at sf0.1 (the delta is exactly
-    # one extra pipeline execution).
-    pairs.count()
-    # localCheckpoint (not cache): truncates lineage so the symmetric
-    # union reads materialized pair rows twice instead of running the
-    # minhash pipeline per reference, and each round below starts
-    # from a constant-size plan.
-    edges = (
-        pairs.unionByName(
-            pairs.select(
-                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-            )
-        )
-        .toDF("src", "dst")
-        .localCheckpoint()
-    )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
-        .localCheckpoint()
-    )
-    # the raw checkpointed frame of the current round — the LogicalRDD
-    # release below must see the checkpoint at the plan ROOT, so the
-    # (node, lbl) projection handed to the next round is tracked
-    # separately from the releasable handle.
-    labels_ckpt = labels
-    for _ in range(10):  # >= diameter of any dup cluster in practice
-        # The convergence probe CARRIES the previous label through the
-        # min-aggregate (own rows tag it, neighbor rows contribute
-        # NULL, max() recovers it — each node owns exactly one row, so
-        # this IS its prior label): `changed` then filters the freshly
-        # checkpointed frame instead of joining it back against the
-        # previous round.  One join per round removed from the
-        # driver-synced probe; r14 A/B (interleaved best-of-3 at
-        # sf0.1, same rounds, same labels): 3.34 → 3.03 s end-to-end.
-        prop = edges.join(
-            labels.select("node", "lbl"), edges["src"] == F.col("node")
-        ).select(F.col("dst").alias("node"), F.col("lbl").alias("cand"))
-        own = labels.select(
-            "node", F.col("lbl").alias("cand"), F.col("lbl").alias("old")
-        )
-        new_labels = (
-            own.unionByName(
-                prop.withColumn("old", F.lit(None).cast("long"))
-            )
-            .groupBy("node")
-            .agg(F.min("cand").alias("lbl"), F.max("old").alias("old"))
-            .localCheckpoint()
-        )
-        changed = new_labels.filter(F.col("lbl") < F.col("old")).count()
-        # each localCheckpoint is EAGER: new_labels' blocks are
-        # materialized by now, so the superseded round's blocks can
-        # be released immediately instead of persisting all rounds
-        # (via the LogicalRDD-level release — plain unpersist() is a
-        # no-op on checkpoint blocks, operators/checkpoint.py).
-        from ondemand_dask_spark.operators.checkpoint import (
-            release_local_checkpoint,
-        )
-
-        release_local_checkpoint(labels_ckpt)
-        labels_ckpt = new_labels
-        labels = new_labels.select("node", "lbl")
-        if changed == 0:
-            break
-    # the final labels are materialized checkpoint blocks — nothing
-    # downstream re-reads edges or the pair cache, so free them now
-    # rather than holding them until the next dedup query.
-    release_local_checkpoint(edges)
-    pairs.unpersist()
-    return _retain(labels_ckpt).select(
-        F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id")
-    )
+    # labels' plan reads the final round's checkpoint blocks, so they
+    # must outlive this call — retained for next-dedup-query eviction
+    # (dedup_minhash_lsh's entry evicted the PREVIOUS query's set).
+    _retain(ckpt)
+    return labels.select(F.col("node").alias("doc_id"), "cluster_id")
 
 
 @register(
@@ -982,24 +876,16 @@ def dedup_cc_star_contraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     as in the propagation variant, and superseded round blocks are
     released eagerly.  At the fixpoint the edge set IS the answer:
     a star (v → component-min) per component."""
-    from ondemand_dask_spark.operators.graphcc import connected_components_star
-
-    pairs = _retain(
-        dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b").cache()
+    # the operator reads the pair list once (its first checkpoint), so
+    # the pairs need no cache of their own
+    labels, star_edges = connected_components_star(
+        dedup_minhash_lsh(spark, sf_dir), "doc_a", "doc_b"
     )
-    # eager cache population — same two-branch-union race as the
-    # propagation variant above (see comment there).
-    pairs.count()
-    labels, star_edges = connected_components_star(pairs, "doc_a", "doc_b")
     # labels' plan reads the converged stars' checkpoint blocks, so
     # they must outlive this call — retained for next-dedup-query
-    # eviction.  pairs is fully upstream of the first checkpoint cut
-    # and can release now.
+    # eviction.
     _retain(star_edges)
-    pairs.unpersist()
-    return labels.select(
-        F.col("node").alias("doc_id"), "cluster_id"
-    )
+    return labels.select(F.col("node").alias("doc_id"), "cluster_id")
 
 
 @register(
@@ -1243,9 +1129,8 @@ def dedup_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # best-of-3 at sf0.1 — 2.06 s uncached vs 1.52 s cached (−27%).
     # Eager count, not lazy: both consumers sit inside ONE job, and a
     # lazy cache makes it a scheduler race whether the second branch
-    # hits warm blocks (the dedup_connected_components bimodality,
-    # same fix).  Retained per the module discipline — the next dedup
-    # query entry evicts it.
+    # hits warm blocks or re-runs the gram lineage.  Retained per the
+    # module discipline — the next dedup query entry evicts it.
     _evict_retained()
     grams = _retain(grams.cache())
     grams.count()
@@ -1518,93 +1403,26 @@ def dedup_minhash_estimate_certificate(
     for all of them, and this query IS that audit (same shape as
     the KLL/theta sketch certificates).  Candidate pairs with a
     band collision but zero common shingles get exact = 0 via the
-    left join — exactly the false-positive class the estimate
-    overstates.  Plan: the same banded-LSH candidate join as
-    dedup_minhash_lsh (never n²), one signature equi-join per side,
-    and the candidate-restricted intersection count."""
+    intersection — exactly the false-positive class the estimate
+    overstates.  Plan: the same cached per-doc table and bucket
+    candidates as dedup_minhash_lsh (never n²), both sides' rows
+    joined onto each pair; est_j reads the mh columns and the exact
+    Jaccard the shingle-set sizes."""
     _evict_retained()
-    sh = _retain(_hashed_shingles(spark, sf_dir).cache())
-    mh = _retain(
-        sh.groupBy("doc_id")
-        .agg(
-            *[
-                F.min(
-                    (F.lit(_MH_A[s]) * F.col("h") + F.lit(_MH_B[s]))
-                    % F.lit(_MH_P)
-                ).alias(f"mh{s}")
-                for s in range(NUM_HASHES)
-            ]
-        )
-        .cache()
-    )
-    sig = None
-    for b in range(NUM_HASHES // BAND_ROWS):
-        part = mh.select(
-            "doc_id",
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                ",",
-                F.col(f"mh{b * BAND_ROWS}").cast("string"),
-                F.col(f"mh{b * BAND_ROWS + 1}").cast("string"),
-            ).alias("sig"),
-        )
-        sig = part if sig is None else sig.unionByName(part)
-    a, b = sig.alias("a"), sig.alias("b")
-    cand = _retain(
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-        .cache()
-    )
-    counts = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    x, y = sh.alias("x"), sh.alias("y")
-    inter = (
-        cand.join(x, F.col("x.doc_id") == F.col("doc_a"))
-        .join(
-            y,
-            (F.col("y.doc_id") == F.col("doc_b"))
-            & (F.col("y.h") == F.col("x.h")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("i"))
-    )
+    docs = _retain(_minhash_docs(spark, sf_dir).cache())
     agree = sum(
-        F.when(F.col(f"ma.mh{s}") == F.col(f"mb.mh{s}"), 1).otherwise(0)
+        F.when(F.col(f"a.mh{s}") == F.col(f"b.mh{s}"), 1).otherwise(0)
         for s in range(NUM_HASHES)
     )
-    est = (
-        cand.join(mh.alias("ma"), F.col("ma.doc_id") == F.col("doc_a"))
-        .join(mh.alias("mb"), F.col("mb.doc_id") == F.col("doc_b"))
-        .select(
-            "doc_a", "doc_b",
-            (agree / float(NUM_HASHES)).alias("est_j"),
-        )
-    )
-    ii = F.coalesce(F.col("i"), F.lit(0)).cast("double")
-    ex = ii / (F.col("na.n") + F.col("nb.n") - ii)
-    return (
-        est.join(inter, ["doc_a", "doc_b"], "left")
-        .join(counts.alias("na"), F.col("na.doc_id") == F.col("doc_a"))
-        .join(counts.alias("nb"), F.col("nb.doc_id") == F.col("doc_b"))
-        .select(
-            "doc_a",
-            "doc_b",
-            (F.round(F.col("est_j") - 1e-9, _R) + 0.0).alias(
-                "est_jaccard"
-            ),
-            (F.round(ex - 1e-9, _R) + 0.0).alias("exact_jaccard"),
-            (F.round(F.abs(F.col("est_j") - ex) - 1e-9, _R) + 0.0).alias(
-                "abs_err"
-            ),
-        )
+    est = agree / float(NUM_HASHES)
+    i = F.size(F.array_intersect("a.hs", "b.hs")).cast("double")
+    ex = i / (F.size("a.hs") + F.size("b.hs") - i)
+    return _with_docs(_lsh_candidates(docs), docs).select(
+        "doc_a",
+        "doc_b",
+        (F.round(est - 1e-9, _R) + 0.0).alias("est_jaccard"),
+        (F.round(ex - 1e-9, _R) + 0.0).alias("exact_jaccard"),
+        (F.round(F.abs(est - ex) - 1e-9, _R) + 0.0).alias("abs_err"),
     )
 
 
@@ -1745,8 +1563,8 @@ def dedup_edit_distance_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks — and candidate pairs — grow quadratically with the
     corpus: measured 1.54 s at sf0.1 but 115.7 s at sf1 (α ≈ 1.9),
     the shape extra executors cannot fix.  This variant takes
-    candidates from the SAME deterministic minhash band-collision
-    join as dedup_minhash_lsh (collisions, never n² — the pipeline's
+    candidates from the SAME deterministic minhash band buckets
+    as dedup_minhash_lsh (collisions, never n² — the pipeline's
     α is the LSH family's, 0.35 at the committed ladder) and runs
     the banded-DP threshold verify plus a same-lang filter on just
     those pairs.  Recall is the standard LSH envelope (a k-edit pair
@@ -1762,42 +1580,8 @@ def dedup_edit_distance_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1, 3.87 s at sf1 (α ≈ 0.19) vs the exhaustive twin's 1.54 →
     115.7 s — 30× at sf1 and widening with the square."""
     _evict_retained()
-    sh = _retain(_hashed_shingles(spark, sf_dir).cache())
-    mh = sh.groupBy("doc_id").agg(
-        *[
-            F.min(
-                (F.lit(_MH_A[s]) * F.col("h") + F.lit(_MH_B[s])) % F.lit(_MH_P)
-            ).alias(f"mh{s}")
-            for s in range(NUM_HASHES)
-        ]
-    )
-    mh = _retain(mh.cache())
-    sig = None
-    for b in range(NUM_HASHES // BAND_ROWS):
-        part = mh.select(
-            "doc_id",
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                ",",
-                F.col(f"mh{b * BAND_ROWS}").cast("string"),
-                F.col(f"mh{b * BAND_ROWS + 1}").cast("string"),
-            ).alias("sig"),
-        )
-        sig = part if sig is None else sig.unionByName(part)
-    a, b = sig.alias("a"), sig.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
+    # the per-doc table is read once (by the bucket explode): no cache
+    cand = _lsh_candidates(_minhash_docs(spark, sf_dir))
     d = load_table(spark, sf_dir, "documents")
     da = d.select(
         F.col("doc_id").alias("__ida"),

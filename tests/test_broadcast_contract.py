@@ -15,7 +15,6 @@ guard (so a future edit cannot silently drop the contract).
 from __future__ import annotations
 
 import inspect
-import os
 
 import pytest
 
@@ -72,6 +71,6 @@ def test_vector_broadcasts_route_through_guard():
         ),
     ]:
         src = inspect.getsource(fn)
-        assert f'_broadcast_vec' in src and needle in src, fn.__name__
+        assert '_broadcast_vec' in src and needle in src, fn.__name__
     census = inspect.getsource(g._intersection_census)
     assert "graph_triangle adjacency" in census

@@ -158,7 +158,8 @@ def test_ivf_probes_broadcast(spark, sf_dir):
 )
 def test_pair_generation_never_cartesian(name, spark, sf_dir):
     """The whole point of LSH/SimHash/IVF blocking: candidate pairs
-    form through bucket equi-joins, so no plan may contain a
+    form inside buckets (bucket equi-joins, or a bucket groupBy and
+    an in-bucket pair explode), so no plan may contain a
     Cartesian product — the n² shape that cannot survive scale.
     (Brute-force ann_cosine_topk is the deliberate exception and is
     excluded.)"""
@@ -166,6 +167,15 @@ def test_pair_generation_never_cartesian(name, spark, sf_dir):
 
     plan = plan_string(_df(name, spark, sf_dir))
     assert "CartesianProduct" not in plan, name
+
+
+def test_minhash_lsh_three_exchanges(spark, sf_dir):
+    """MinHash-LSH runs off one cached per-doc table: the per-doc
+    groupBy, the (band, sig) bucket groupBy and the pair distinct are
+    its only exchanges.  Verification joins the small candidate set
+    to that table and intersects shingle-hash arrays on the joined
+    row — no shingle×shingle probe join, no per-doc count join."""
+    assert shuffle_count(_df("dedup_minhash_lsh", spark, sf_dir)) <= 3
 
 
 def test_new_scalar_paths_jvm(spark, sf_dir):
