@@ -228,18 +228,6 @@ ISOLATED = [
     "dedup_connected_components", "graph_label_propagation",
 ]
 
-# The graph family is reported as its own subtotal: each graph query
-# deliberately rebuilds + re-caches the co-purchase edge set at entry
-# (the cache-lifecycle discipline evicts the previous query's blocks),
-# so the family's bench cost includes the edge build per query.  That
-# is a DECISION, not an accident: the per-query numbers time the same
-# self-contained contract the driver correctness-checks.  Since r8 the
-# family is ADDITIONALLY timed under one shared pre-materialized edge
-# cache (graph_family_shared_subtotal in the emitted JSON) — the
-# production-session cost where the edge frame is built once — so
-# both contracts are recorded without conflating them.
-
-
 # Mid-loop micro-calibration cadence (r13 verdict item "close the
 # drift instrument's blind spot"): the start/end calibration pairs
 # bracket the query loop but cannot see a stall INSIDE it — the r13
@@ -479,11 +467,10 @@ def main() -> None:
         # queries (minhash/LSH cache intermediates) so no query is
         # timed under another's memory pressure or warm cache.
         # evict_all_retained frees retained caches and pinned
-        # localCheckpoints across EVERY query module — the per-module
-        # discipline only evicts at the next same-module entry, so
-        # without this a query is timed under the previous module's
-        # storage blocks.  r7 adjacency measurement for the r6
-        # "dedup_minhash_lsh +15%" flag: isolated best-of-5 = 1.76 s
+        # localCheckpoints (every registered query also does so on
+        # entry; calling it here keeps the release off the clock).
+        # r7 adjacency measurement for the r6 "dedup_minhash_lsh
+        # +15%" flag: isolated best-of-5 = 1.76 s
         # (exactly the r6 number — no real regression; r5's 1.54 s
         # was a quieter run), but right after graph_bfs_khop it is
         # ~2.5 s EVEN WITH this eviction — residual JVM churn (GC /
@@ -684,43 +671,6 @@ def main() -> None:
     # regression guard uses the most-lenient of the four ratios.
     calib_end = round(min(calibrate() for _ in range(RUNS)), 4)
     calib_bw_end = round(calibrate_bw(), 4)
-
-    # Graph shared-edge-cache A/B (r7 verdict item 5): the primary
-    # numbers above keep the self-contained contract (each graph query
-    # rebuilds + re-caches the co-purchase edges — what the driver's
-    # isolated correctness runs execute).  A production session would
-    # materialize the edge frame once for the whole family, so the
-    # family is ALSO timed under one shared cache and reported as a
-    # separate subtotal — without touching the per-query numbers.
-    graph_names = [n for n in names if n.startswith("graph_")]
-    shared_timings: dict[str, float] = {}
-    if graph_names:
-        from ondemand_dask_spark.queries.graph import release_shared_edges
-
-        evict_all_retained()
-        spark.catalog.clearCache()
-        os.environ["SPARK_GRAFT_SHARED_EDGES"] = "1"
-        try:
-
-            def run_shared(name: str) -> float:
-                # evict per-query derived caches, but NOT the shared
-                # edge frame (unregistered by design) — so no
-                # clearCache() here
-                evict_all_retained()
-                t0 = time.perf_counter()
-                df = queries[name].fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                return time.perf_counter() - t0
-
-            for n in graph_names:  # warm-up (first call builds the cache)
-                run_shared(n)
-            for n in graph_names:
-                shared_timings[n] = round(
-                    min(run_shared(n) for _ in range(RUNS)), 4
-                )
-        finally:
-            os.environ.pop("SPARK_GRAFT_SHARED_EDGES", None)
-            release_shared_edges()
 
     # Per-round isolated protocol on the most expensive headline queries (4 since the exact triangle census left for certificate class): a
     # FRESH session (the main one is stopped first so none of its
@@ -929,13 +879,6 @@ def main() -> None:
         "r2_comparable_subtotal": r2_subtotal,
         "r3_comparable_subtotal": r3_subtotal,
         "graph_family_subtotal": graph_subtotal,
-        # same family timed under ONE pre-materialized edge cache
-        # (edge build excluded from every timing) — the production-
-        # session cost, with the per-query map.
-        "graph_family_shared_subtotal": round(
-            sum(shared_timings.values()), 4
-        ),
-        "graph_shared_queries": shared_timings,
         # most expensive headline queries under the isolated protocol (fresh
         # session, own calibrations, 1 warm-up + 5 timed runs each).
         "isolated": isolated,

@@ -17,7 +17,6 @@ from ondemand_dask_spark.operators import (
     choose_quantile_path,
     exact_group_quantiles,
     exact_group_quantiles_auto,
-    exact_group_quantiles_select,
     from_spark,
     merge_asof,
     salted_agg,
@@ -37,7 +36,6 @@ __all__ = [
     "choose_quantile_path",
     "exact_group_quantiles",
     "exact_group_quantiles_auto",
-    "exact_group_quantiles_select",
     "salted_agg",
     "salted_join",
 ]

@@ -10,7 +10,7 @@ One quirk is centralized here so no query can get it wrong
 (SURVEY.md §0.5.1): `events.ts` has shipped in two parquet encodings
 across driver testdata generations — INT64 TIMESTAMP(NANOS), which
 Spark 4 only reads with `spark.sql.legacy.parquet.nanosAsLong`
-(runtime-settable) as a bigint of nanoseconds, and plain
+(set by both session entry points) as a bigint of nanoseconds, and plain
 TIMESTAMP(MICROS) naive, which reads natively as timestamp_ntz.  The
 loader sniffs the decoded dtype and normalizes either to a µs
 TimestampNTZ — `timestamp_ntz` matches the other tables' naive
@@ -44,10 +44,8 @@ BROADCAST_DIMS = frozenset({"region", "nation"})
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one test table as a DataFrame with normalized types."""
     if name == "events":
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass  # static in some builds; only needed for NANOS files
+        # INT64 NANOS files need nanosAsLong, which both session entry
+        # points set (session.ENGINE_CONF).
         df = spark.read.parquet(f"{sf_dir}/events.parquet")
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

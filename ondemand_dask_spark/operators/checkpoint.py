@@ -37,54 +37,32 @@ def release_local_checkpoint(df: DataFrame) -> bool:
     return False
 
 
-class RetainedCaches:
-    """Cache-lifecycle discipline for query modules.
-
-    Caches (and localCheckpoints) created inside a query must outlive
-    the call — the returned DataFrame is lazy and references them — so
-    they cannot unpersist at function exit.  Instead each query module
-    keeps ONE instance of this class: every cache registers via
-    `retain()`, and the NEXT query entry in that module calls `evict()`
-    to release the previous query's set.  A long driver session thus
-    retains at most one query's storage blocks per module.
-
-    Eviction is checkpoint-aware: `df.unpersist()` is a silent no-op on
-    localCheckpoint'ed frames (see module docstring), so eviction tries
-    the LogicalRDD-level release first and falls back to the normal
-    CacheManager path for plain `.cache()`/`.persist()` frames.
-    """
-
-    def __init__(self) -> None:
-        self._frames: list[DataFrame] = []
-        _ALL_CACHES.append(self)
-
-    def retain(self, df: DataFrame) -> DataFrame:
-        self._frames.append(df)
-        return df
-
-    def evict(self) -> None:
-        while self._frames:
-            try:
-                df = self._frames.pop()
-                if not release_local_checkpoint(df):
-                    df.unpersist()
-            except Exception:
-                pass  # session already stopped — nothing to release
+# Frames whose storage must outlive the call that created them: the
+# returned DataFrame is lazy and reads them, so they cannot be released
+# at function exit.  `registry.register` wraps every query so that each
+# query entry evicts the previous query's set, and a long session holds
+# at most one query's storage blocks.
+_RETAINED: list[DataFrame] = []
 
 
-_ALL_CACHES: list[RetainedCaches] = []
+def retain(df: DataFrame) -> DataFrame:
+    """Register a `.cache()`d or `localCheckpoint()`ed frame for release
+    at the next query entry; returns `df` unchanged."""
+    _RETAINED.append(df)
+    return df
 
 
 def evict_all_retained() -> None:
-    """Release every module's retained caches and checkpoints at once.
+    """Release every retained cache and checkpoint.
 
-    The per-module discipline frees a query's blocks at the NEXT
-    entry into the same module — correct for memory bounds, but a
-    benchmark timing query B right after query A from a different
-    module still runs under A's leftover blocks (measured: graph
-    leftovers added ~0.5-0.8 s to the next dedup query at
-    sf0.1).  Benchmarks call this between queries for self-contained
-    timings; the driver's long sessions may also call it between
-    query families."""
-    for c in _ALL_CACHES:
-        c.evict()
+    Checkpoint-aware: `df.unpersist()` is a silent no-op on
+    localCheckpoint'ed frames (see module docstring), so each frame
+    gets the LogicalRDD-level release first and falls back to the
+    CacheManager path for plain `.cache()`/`.persist()` frames."""
+    while _RETAINED:
+        try:
+            df = _RETAINED.pop()
+            if not release_local_checkpoint(df):
+                df.unpersist()
+        except Exception:
+            pass  # session already stopped — nothing to release

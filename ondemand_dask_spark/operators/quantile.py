@@ -16,36 +16,13 @@ memory per task O(1).  The right shape when |groups| ≫ cores (the
 common 100 TB case: quantiles per tenant / per day) — each group's
 sort is one task, and there are plenty.
 
-`exact_group_quantiles_select` — selection-based, for FEW huge
-groups where one-task-per-group sorts serialize.  One `approxQuantile`
-sketch pass yields ~`buckets` global cutpoints (GK sketch, single
-pass, driver receives only the cutpoints); rows get a bucket id from
-the broadcast cutpoints (codegen'd comparison chain, no shuffle);
-per-(group, bucket) counts — |groups|·|buckets| rows — carry rank
-offsets and group sizes via a window over that tiny table only;
-buckets containing a target rank floor/ceil((n-1)·q) survive a
-broadcast join (~2·|qs|/buckets of the input) and only THEY are
-sorted; local rank + bucket offset = exact global rank.  Equal
-values always share a bucket, so per-bucket rank concatenation is a
-valid global sort order even with ties.  Shuffle cost ≈ 2·|qs|/
-buckets of the input instead of all of it; parallelism = groups ×
-targeted buckets.  Measured at sf0.1 (600k rows, 3 groups): the
-extra scans cost far more than simply sorting — r5 A/B in one warm
-local[32] session (tools/ab_quantile.py, best-of-3): sort path
-1.47 s, select with GK-sketch cutpoints 9.2 s, select with linear
-min/max cutpoints 8.5 s, so even removing the sketch pass does not
-rescue it at toy scale.  The crossover is where a group's sort no
-longer fits one task, NOT here — the sort path stays the default,
-and the r3 'make agg_groupby_quantile ~1.2 s' directive is closed
-as machine noise: the same A/B shows the count-window vs count-join
-shapes within 10% (1.47 vs 1.43 s), i.e. no re-scan to remove.
-r10 re-ran the A/B at sf1 (6M rows, still 3 groups ⇒ 2M-row
-single-task sorts, tools/ab_quantile.py best-of-3): sort 13.0 s vs
-select 10.9 s — the selection path overtakes exactly where the
-theory says (group size ≫ rows/core), confirming the knee is real
-and sits near the 4M-row estimate; the registered query keeps
-path='sort' because every committed bench SF is below it, and
-callers without that prior pay the probe and flip automatically.
+`exact_group_quantiles_ranged` — range-partitioned, for FEW huge
+groups where one-task-per-group sorts serialize.  Ranks by (keys…,
+value) with the two-phase distributed rank (operators/rank.py), so a
+huge group spans many partitions and sorts at cluster width.
+`exact_group_quantiles_auto` probes the largest group size and picks
+between the two (numbers: OPTIMIZATION_r15.md, "agg_groupby_quantile
+/ agg_winsorize: ranged path past the knee").
 
 Exactness of both is differentially proven by the
 `agg_groupby_quantile` oracle query and property-tested against
@@ -60,6 +37,8 @@ import operator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ondemand_dask_spark.operators.checkpoint import retain
 
 
 def _h(q: float):
@@ -147,7 +126,6 @@ def exact_group_quantiles_ranged(
     keys: list[str],
     col: str,
     qs: dict[str, float],
-    retain=None,
 ) -> DataFrame:
     """Range-partitioned sort path — parallel in BOTH group regimes.
 
@@ -168,20 +146,18 @@ def exact_group_quantiles_ranged(
     path's row_number — interpolating between equal values returns
     that value, so the quantile is unaffected.
 
-    A/B vs the other paths (tools/ab_quantile.py arms, one warm
-    session, interleaved best-of-3, generated sf1 = 6M rows in 3
-    groups): ranged 3.4 s vs window-sort 16.5 s / select_minmax
-    17.0 s / select_sketch 12.9 s; sf0.1 parity (see the r15 entry in
-    OPTIMIZATION_r15.md for the committed numbers).
+    A/B vs the window-sort path (one warm session, interleaved
+    best-of-3, generated sf1 = 6M rows in 3 groups): ranged 3.4 s vs
+    window-sort 16.5 s; sf0.1 parity (OPTIMIZATION_r15.md,
+    "agg_groupby_quantile / agg_winsorize: ranged path past the
+    knee").
     """
     from ondemand_dask_spark.operators.rank import global_row_numbers
 
     d = df.select(*keys, F.col(col).cast("double").alias("__v")).filter(
         F.col("__v").isNotNull()
     )
-    pos = global_row_numbers(
-        d, *keys, "__v", col_name="__pos", retain=retain
-    )
+    pos = global_row_numbers(d, *keys, "__v", col_name="__pos")
     grp = pos.groupBy(*keys).agg(
         F.min("__pos").alias("__st"), F.count("*").alias("__n")
     )
@@ -198,8 +174,7 @@ def exact_group_quantiles_ranged(
 # the knee from measurement: largest group 240k rows (sf0.1) → window
 # 1.56 s vs ranged 1.99 s; largest group 2.4M rows (generated sf1) →
 # window 13.5 s vs ranged 4.5 s.  The crossover sits near 1M rows
-# (the old 4M estimate predates the ranged path and was keyed to the
-# select path's much larger overhead).
+# (the old 4M estimate predates the ranged path).
 MAX_ROWS_PER_SORT_TASK = 1_000_000
 
 
@@ -211,30 +186,10 @@ def choose_quantile_path(
     'ranged' (range-partitioned distributed rank — every group sorts
     at cluster width).  Keyed on the MAX group size, not the
     average — quantile cost is gated by the single worst group
-    (skew-aware).  r15: the big-group path is 'ranged', not
-    'select' — at generated sf1 ranged measured 4.5 s vs
-    select_sketch 12.9 / select_minmax 17.0 / window-sort 13.5 s
-    (tools/ab_quantile.py); the selection path stays implemented as
-    the measured-negative record and for callers that cannot afford
-    the ranged path's localCheckpoint pin."""
+    (skew-aware).  At generated sf1 ranged measured 4.5 s vs
+    window-sort 13.5 s (OPTIMIZATION_r15.md, "agg_groupby_quantile /
+    agg_winsorize: ranged path past the knee")."""
     return "ranged" if max_group_rows > threshold else "sort"
-
-
-# The auto probe's counts cache must outlive this call (the returned
-# lazy DataFrame reuses it), so it cannot be unpersisted here.  To
-# keep a long session running many queries from accumulating retained
-# storage blocks, each new probe evicts the previous call's cache —
-# at most ONE counts table (|groups| rows) stays resident.
-_RETAINED_COUNTS: list[DataFrame] = []
-
-
-def _retain_counts(counts: DataFrame) -> None:
-    while _RETAINED_COUNTS:
-        try:
-            _RETAINED_COUNTS.pop().unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to release
-    _RETAINED_COUNTS.append(counts)
 
 
 def exact_group_quantiles_auto(
@@ -243,9 +198,7 @@ def exact_group_quantiles_auto(
     col: str,
     qs: dict[str, float],
     threshold: int = MAX_ROWS_PER_SORT_TASK,
-    buckets: int = 64,
     path: str | None = None,
-    retain=None,
 ) -> DataFrame:
     """Exact grouped quantiles with runtime path selection.
 
@@ -257,23 +210,19 @@ def exact_group_quantiles_auto(
     distributed rank restores parallelism a 3-group window sort
     can't have.
 
-    path: optional caller hint ('sort' | 'select' | 'ranged') that
-    SKIPS the probe job entirely — for callers that already know the
+    path: optional caller hint ('sort' | 'ranged') that SKIPS the
+    probe job entirely — for callers that already know the
     group-size regime (e.g. a fixed low-cardinality key over a table
     whose scale band is known).  The probe is one scalar-only
     blocking action; cheap absolutely, but a measurable fraction of
     small queries.
 
-    retain: forwarded to the ranged path's localCheckpoint pin (a
-    module's RetainedCaches.retain) so its blocks release at the
-    module's next query entry."""
+    The probe's counts cache outlives this call (the returned lazy
+    DataFrame reuses it), so it is registered with `checkpoint.retain`
+    and released at the next query entry."""
+    if path == "ranged":
+        return exact_group_quantiles_ranged(df, keys, col, qs)
     if path is not None:
-        if path == "select":
-            return exact_group_quantiles_select(df, keys, col, qs, buckets)
-        if path == "ranged":
-            return exact_group_quantiles_ranged(
-                df, keys, col, qs, retain=retain
-            )
         return exact_group_quantiles(df, keys, col, qs)
     d = df.select(*keys, F.col(col).cast("double").alias("__v")).filter(
         F.col("__v").isNotNull()
@@ -283,103 +232,7 @@ def exact_group_quantiles_auto(
     mx = int(row["mx"]) if row and row["mx"] is not None else 0
     if choose_quantile_path(mx, threshold) == "ranged":
         counts.unpersist()
-        return exact_group_quantiles_ranged(df, keys, col, qs, retain=retain)
+        return exact_group_quantiles_ranged(df, keys, col, qs)
     # sort path reuses the cached counts the probe just materialized
-    _retain_counts(counts)
-    return _sort_path(d, counts, keys, qs)
+    return _sort_path(d, retain(counts), keys, qs)
 
-
-def exact_group_quantiles_select(
-    df: DataFrame,
-    keys: list[str],
-    col: str,
-    qs: dict[str, float],
-    buckets: int = 64,
-    cuts_from: str = "minmax",
-) -> DataFrame:
-    """Selection-based variant for few huge groups (see module doc).
-
-    buckets: value-range fan-out; higher = less data sorted but more
-    count rows (|groups|·|buckets|) in the routing table.
-
-    cuts_from: how the routing cutpoints are produced — they only
-    route ranks to buckets, NEVER affect the exact result, so the
-    cheapest adequate strategy wins:
-      'minmax' (default) — linear buckets between the global min/max
-        from one partial-agg scan.  A/B at sf0.1 (tools/ab_quantile
-        .py, one warm session, best-of-3): 0.86 s vs 1.61 s for the
-        sort path and ~4 s for the sketch variant — the GK sketch
-        pass cost more than it saved.  Value skew only unbalances
-        bucket SIZES (cost), not correctness; a pathological
-        all-one-value column degrades to the sort path's shape.
-      'sketch' — equi-depth cutpoints via approxQuantile; pays a GK
-        sketch pass to guarantee balanced buckets.  The right call
-        when the value distribution is so skewed that linear buckets
-        would funnel a target rank into a near-full bucket.
-    """
-    d = df.select(*keys, F.col(col).cast("double").alias("__v")).filter(
-        F.col("__v").isNotNull()
-    )
-    # 1. global cutpoints (approximation only routes ranks to
-    # buckets; it never affects the exact result).
-    if cuts_from == "minmax":
-        row = d.agg(F.min("__v").alias("lo"), F.max("__v").alias("hi")).first()
-        lo = row["lo"] if row and row["lo"] is not None else 0.0
-        hi = row["hi"] if row and row["hi"] is not None else 0.0
-        if hi > lo:
-            step = (hi - lo) / buckets
-            cuts = [lo + i * step for i in range(1, buckets)]
-        else:  # empty input or single distinct value — one bucket
-            cuts = []
-    else:
-        probs = [i / buckets for i in range(1, buckets)]
-        cuts = sorted(
-            set(d.stat.approxQuantile("__v", probs, 1.0 / (2 * buckets)))
-        )
-
-    # 2. bucket id = #cutpoints below the value (codegen'd int adds).
-    if cuts:
-        bucket = functools.reduce(
-            operator.add,
-            [(F.col("__v") > F.lit(c)).cast("int") for c in cuts],
-        )
-    else:  # empty input or single distinct value — one bucket
-        bucket = F.lit(0)
-    db = d.withColumn("__b", bucket)
-
-    # 3. per-(group, bucket) counts; offsets + group size via a window
-    # over this small table only.
-    wb = Window.partitionBy(*keys).orderBy("__b")
-    bc = (
-        db.groupBy(*keys, "__b")
-        .agg(F.count("*").alias("__cnt"))
-        .withColumn(
-            "__off",
-            F.coalesce(
-                F.sum("__cnt").over(wb.rowsBetween(Window.unboundedPreceding, -1)),
-                F.lit(0),
-            ),
-        )
-        .withColumn("__n", F.sum("__cnt").over(Window.partitionBy(*keys)))
-    )
-
-    # 4. keep only buckets holding a target rank.
-    def _in_bucket(rank):
-        return (rank >= F.col("__off")) & (rank < F.col("__off") + F.col("__cnt"))
-
-    is_target = functools.reduce(
-        operator.or_,
-        [
-            _in_bucket(F.floor(_h(q))) | _in_bucket(F.ceil(_h(q)))
-            for q in qs.values()
-        ],
-    )
-    targets = bc.filter(is_target).select(*keys, "__b", "__off", "__n")
-    narrowed = db.join(F.broadcast(targets), on=[*keys, "__b"])
-
-    # 5. exact global rank inside the targeted buckets only.
-    w_sort = Window.partitionBy(*keys, "__b").orderBy("__v")
-    ranked = narrowed.withColumn(
-        "__rn", F.col("__off") + F.row_number().over(w_sort) - 1
-    )
-    return _boundary_rows(ranked, keys, qs)

@@ -28,12 +28,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ondemand_dask_spark.operators.checkpoint import retain
+
 
 def global_row_numbers(
     df: DataFrame,
     *keys: str | Column,
     col_name: str = "pos",
-    retain=None,
 ) -> DataFrame:
     """Append 1-based global positions ordered by `keys` (must form a
     total order) without a single-task global window.
@@ -47,11 +48,10 @@ def global_row_numbers(
     one sampled set of range boundaries would be applied to row
     numbers from another, silently corrupting positions.  The
     checkpoint RDD is computed once at first action and shared by
-    both plan branches.  Pass `retain` (a module's
-    RetainedCaches.retain) to register the pinned frame for eager
-    release at the module's next query entry — otherwise the blocks
-    linger until GC, which measurably taxes the NEXT query in a
-    bench session.
+    both plan branches.  The pinned frame is registered with
+    `checkpoint.retain`, so its blocks release at the next query
+    entry — left to GC they linger, which measurably taxes the NEXT
+    query in a bench session.
 
     r15: local numbering is `monotonically_increasing_id` over the
     sorted partitions, NOT a row_number window partitioned by
@@ -76,16 +76,15 @@ def global_row_numbers(
     (measured at generated sf1: range+sort 11.6 s coalesced vs 1.7 s
     at an explicit 64) — while REPARTITION_BY_NUM is exempt.  Core-
     proportional, so rows/task = data/(2·cores) at any cluster width.
-    A/B: tools/ab_quantile.py 'ranged' arm at generated sf1 dropped
-    17.1 → ~4 s once this fed it (numbers in OPTIMIZATION_r15.md)."""
+    A/B: the ranged quantile path at generated sf1 dropped 17.1 →
+    ~4 s once this fed it (OPTIMIZATION_r15.md, "operators/rank.py
+    `global_row_numbers`: two structural defects fixed")."""
     n_parts = 2 * df.sparkSession.sparkContext.defaultParallelism
     ranged = df.repartitionByRange(n_parts, *keys).sortWithinPartitions(
         *keys
     )
     local = ranged.withColumn("__mid", F.monotonically_increasing_id())
-    local = local.localCheckpoint(eager=False)
-    if retain is not None:
-        retain(local)
+    local = retain(local.localCheckpoint(eager=False))
     pid = F.shiftright(F.col("__mid"), 33).alias("__ods_pid")
     counts = local.groupBy(pid).agg(
         F.count("*").alias("__cnt"),
@@ -132,7 +131,6 @@ def global_prefix_sums(
     *keys: str | Column,
     pos_col: str = "pos",
     cum_col: str = "cum",
-    retain=None,
 ) -> DataFrame:
     """Append 1-based global positions AND the running sum of
     `value_col` in that order — the distributed twin of
@@ -157,9 +155,7 @@ def global_prefix_sums(
     ).withColumn("__cs", F.sum(value_col).over(w_run))
     # pin the range exchange: counts and the final join must read ONE
     # materialization (see global_row_numbers).
-    local = local.localCheckpoint(eager=False)
-    if retain is not None:
-        retain(local)
+    local = retain(local.localCheckpoint(eager=False))
     counts = local.groupBy("__ods_pid").agg(
         F.count("*").alias("__cnt"), F.sum(value_col).alias("__sum")
     )
@@ -189,7 +185,6 @@ def global_min_ranks(
     value_col: str,
     tiebreak: str | Column,
     col_name: str = "rnk",
-    retain=None,
 ) -> DataFrame:
     """Append `rank() OVER (ORDER BY value_col)` — ties share their
     MIN position — without a single-task global window.
@@ -204,7 +199,7 @@ def global_min_ranks(
     (value_col, tiebreak) a total order or positions are
     nondeterministic."""
     numbered = global_row_numbers(
-        df, value_col, tiebreak, col_name="__pos", retain=retain
+        df, value_col, tiebreak, col_name="__pos"
     )
     w_val = Window.partitionBy(value_col)
     return numbered.withColumn(
@@ -217,7 +212,6 @@ def global_prefix_min(
     value_col: str,
     *keys: str | Column,
     col_name: str = "pmin",
-    retain=None,
 ) -> DataFrame:
     """Append the running minimum of `value_col` over all STRICT
     predecessors in the total order given by `keys` — the distributed
@@ -248,9 +242,7 @@ def global_prefix_min(
     )
     # pin the range exchange: the per-partition min table and the
     # final join must read ONE materialization (see global_row_numbers).
-    local = local.localCheckpoint(eager=False)
-    if retain is not None:
-        retain(local)
+    local = retain(local.localCheckpoint(eager=False))
     mins = local.groupBy("__ods_pid").agg(F.min(value_col).alias("__pm"))
     w_off = Window.orderBy("__ods_pid").rowsBetween(
         Window.unboundedPreceding, -1

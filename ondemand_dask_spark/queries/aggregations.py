@@ -24,15 +24,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ondemand_dask_spark.io import load_table
-from ondemand_dask_spark.operators.checkpoint import RetainedCaches
 from ondemand_dask_spark.registry import register
 
 _R = 4
-
-# Checkpoint lifecycle for stat_spearman_corr's two pinned range
-# exchanges (operators/rank.py): retained past the call, released at
-# the next entry — same discipline as dedup/graph.
-_CACHES = RetainedCaches()
 
 
 @register(
@@ -397,7 +391,8 @@ def agg_groupby_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     one task with 31 cores idle; the probe (one scalar action over a
     partial-agg count the sort path reuses) picks sort at the bench
     SFs and ranged at sf1+ (13.5 → 4.5 s measured, identity-checked —
-    tools/ab_quantile.py).  The sketch path is
+    OPTIMIZATION_r15.md, "agg_groupby_quantile / agg_winsorize: ranged
+    path past the knee").  The sketch path is
     `agg_quantile_approx`."""
     from ondemand_dask_spark.operators.quantile import exact_group_quantiles_auto
 
@@ -405,7 +400,6 @@ def agg_groupby_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     qdf = exact_group_quantiles_auto(
         li, ["l_returnflag"], "l_extendedprice",
         {"median_price": 0.5, "p90_price": 0.9},
-        retain=_CACHES.retain,
     )
     return qdf.select(
         "l_returnflag",
@@ -1410,7 +1404,6 @@ def agg_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     cuts = exact_group_quantiles_auto(
         li, ["l_returnflag"], "l_extendedprice",
         {"lo": 0.05, "hi": 0.95},
-        retain=_CACHES.retain,
     )
     v = F.col("l_extendedprice")
     clipped = F.least(F.greatest(v, F.col("lo")), F.col("hi"))
@@ -2177,7 +2170,6 @@ def stat_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on o_orderkey) to pair (rx, ry) per row before corr."""
     from ondemand_dask_spark.operators.rank import global_min_ranks
 
-    _CACHES.evict()
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_totalprice",
@@ -2186,11 +2178,9 @@ def stat_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     rx = global_min_ranks(
         o.select("o_orderkey", "o_totalprice"),
         "o_totalprice", "o_orderkey", col_name="rx",
-        retain=_CACHES.retain,
     ).select("o_orderkey", "rx")
     ry = global_min_ranks(
-        o.select("o_orderkey", "__od"), "__od", "o_orderkey",
-        col_name="ry", retain=_CACHES.retain,
+        o.select("o_orderkey", "__od"), "__od", "o_orderkey", col_name="ry"
     ).select("o_orderkey", "ry")
     r = rx.join(ry, "o_orderkey")
     return r.agg(

@@ -35,15 +35,10 @@ from pyspark.sql.window import Window
 
 from ondemand_dask_spark.io import load_table
 from ondemand_dask_spark.operators.asof import merge_asof
-from ondemand_dask_spark.operators.checkpoint import RetainedCaches
+from ondemand_dask_spark.operators.checkpoint import retain
 from ondemand_dask_spark.registry import register
 
 _R = 4
-
-# Checkpoint lifecycle for sql_recursive_sessionize's edge frame:
-# retained past the call (the recursion's result is lazy and reads
-# it), released at the next entry — same discipline as dedup/graph.
-_CACHES = RetainedCaches()
 
 _RIGHT_SQL = """
     SELECT user_id, ts, event_id, value
@@ -691,10 +686,9 @@ def sql_recursive_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_fuzz_events_differential.py."""
     from pyspark.sql.window import Window as W
 
-    _CACHES.evict()
     e = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    ev = _CACHES.retain(e.select(
+    ev = retain(e.select(
         "event_id", "user_id", "ts", "value",
         F.lag("event_id").over(w).alias("prev_id"),
         (
@@ -839,7 +833,6 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary between engines; all ties break on user_id."""
     from ondemand_dask_spark.operators.rank import global_row_numbers
 
-    _CACHES.evict()
     e = load_table(spark, sf_dir, "events")
     agg = e.groupBy("user_id").agg(
         F.max(F.unix_micros(F.col("ts").cast("timestamp"))).alias("last_us"),
@@ -851,16 +844,15 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranked = global_row_numbers(
         agg, F.col("last_us").desc(), F.col("user_id").asc(),
-        col_name="__rpos", retain=_CACHES.retain,
+        col_name="__rpos",
     )
     ranked = global_row_numbers(
         ranked, F.col("freq").desc(), F.col("user_id").asc(),
-        col_name="__fpos", retain=_CACHES.retain,
+        col_name="__fpos",
     )
     ranked = global_row_numbers(
         ranked, F.round(F.col("monetary"), 4).desc(),
         F.col("user_id").asc(), col_name="__mpos",
-        retain=_CACHES.retain,
     )
     n_row = agg.agg(F.count("*").alias("__n"))
 
@@ -986,14 +978,13 @@ def orders_pareto_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's segment-tree window aggregation performs."""
     from ondemand_dask_spark.operators.rank import global_prefix_sums
 
-    _CACHES.evict()
     o = load_table(spark, sf_dir, "orders")
     per_cust = o.groupBy("o_custkey").agg(
         F.round(F.sum("o_totalprice"), 4).alias("rev")
     )
     ranked = global_prefix_sums(
         per_cust, "rev", F.col("rev").desc(), F.col("o_custkey").asc(),
-        pos_col="rnk", cum_col="cum_rev", retain=_CACHES.retain,
+        pos_col="rnk", cum_col="cum_rev",
     )
     tot = per_cust.agg(
         F.sum("rev").alias("total_rev"), F.count("*").alias("n_cust")
@@ -1493,7 +1484,6 @@ def part_skyline_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     reported price rounds."""
     from ondemand_dask_spark.operators.rank import global_prefix_min
 
-    _CACHES.evict()
     p = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_retailprice", "p_size"
     )
@@ -1503,7 +1493,6 @@ def part_skyline_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_retailprice",
         "p_size",
         "p_partkey",
-        retain=_CACHES.retain,
     )
     return o.filter(
         F.col("pmin").isNull() | (F.col("p_size") < F.col("pmin"))
@@ -1870,7 +1859,6 @@ def orders_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     class rollup is a 3-row hash agg."""
     from ondemand_dask_spark.operators.rank import global_prefix_sums
 
-    _CACHES.evict()
     per_part = (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_partkey")
@@ -1882,7 +1870,6 @@ def orders_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rev").desc(),
         "l_partkey",
         cum_col="cum_rev",
-        retain=_CACHES.retain,
     )
     tot = ranked.agg(F.sum("rev").alias("total_rev"))
     classed = ranked.crossJoin(F.broadcast(tot)).select(

@@ -39,7 +39,7 @@ from ondemand_dask_spark.functions.texthash import (
     shingles as _shingle_array,
 )
 from ondemand_dask_spark.io import load_table
-from ondemand_dask_spark.operators.checkpoint import RetainedCaches
+from ondemand_dask_spark.operators.checkpoint import retain
 from ondemand_dask_spark.operators.graphcc import (
     connected_components_minlabel,
     connected_components_star,
@@ -56,19 +56,6 @@ JACCARD_THRESHOLD = 0.5
 # SQL twin of functions.texthash.portable_hash64 (see that module for
 # the affine minhash family rationale).
 _H_SQL = "CAST('0x' || substr(md5({x}), 1, 15) AS BIGINT)"
-
-
-# Caches created inside a query must outlive the call (the returned
-# DataFrame is lazy and its plan references them), so they cannot be
-# unpersisted at function exit.  Instead each cache registers here
-# and the NEXT dedup query entry evicts the previous set — a long
-# driver session running hundreds of queries retains at most one
-# query's worth of dedup storage blocks instead of accumulating all
-# of them.
-_CACHES = RetainedCaches()
-
-_evict_retained = _CACHES.evict
-_retain = _CACHES.retain
 
 
 def _minhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -246,8 +233,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct; pinned in tests/test_plans.py).  A/B against the
     earlier band-union self-join shape: CHANGES.md.
     """
-    _evict_retained()
-    docs = _retain(_minhash_docs(spark, sf_dir).cache())
+    docs = retain(_minhash_docs(spark, sf_dir).cache())
     i = F.size(F.array_intersect("a.hs", "b.hs"))
     jac = i.cast("double") / (F.size("a.hs") + F.size("b.hs") - i)
     return (
@@ -677,8 +663,7 @@ def _ngram_pair_scores(spark: SparkSession, sf_dir: str):
         .filter(F.col("df") <= thresh)
         .select("h")
     )
-    _evict_retained()
-    kept_inst = _retain(
+    kept_inst = retain(
         safe_kept.unionByName(
             sus_uniq.join(sus_keep, "h", "left_semi")
         ).cache()
@@ -729,9 +714,11 @@ def _ngram_pair_scores(spark: SparkSession, sf_dir: str):
     # the shuffle (plan: Generate → Exchange(2·par) → partial+final
     # HashAggregate): per-task state shrinks ~8×, no spill, every
     # core busy.
-    # A/B (tools/ab_ngram_r15.py, one warm session, interleaved
-    # best-of-4, identity-checked): sf1 25.6 → 11.0 s (fin=2; fin=1
-    # 15.5, fin=4 11.3, map-side-combine shapes rep1/rep2 17.6/19.9);
+    # A/B (OPTIMIZATION_r15.md, "dedup_ngram_jaccard (+ containment
+    # twin): pair aggregate at cluster width"; one warm session,
+    # interleaved best-of-4, identity-checked): sf1 25.6 → 11.0 s
+    # (fin=2; fin=1 15.5, fin=4 11.3, map-side-combine shapes
+    # rep1/rep2 17.6/19.9);
     # sf0.1 2.39 → 2.85 s — the small-SF stage-overhead constant the
     # at-scale shape costs.  The raw-pair exchange moves ~2× the
     # partially-agged bytes but they are fixed-width 33 B rows; the
@@ -819,9 +806,8 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_minhash_lsh(spark, sf_dir), "doc_a", "doc_b"
     )
     # labels' plan reads the final round's checkpoint blocks, so they
-    # must outlive this call — retained for next-dedup-query eviction
-    # (dedup_minhash_lsh's entry evicted the PREVIOUS query's set).
-    _retain(ckpt)
+    # must outlive this call — retained until the next query entry.
+    retain(ckpt)
     return labels.select(F.col("node").alias("doc_id"), "cluster_id")
 
 
@@ -882,9 +868,9 @@ def dedup_cc_star_contraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_minhash_lsh(spark, sf_dir), "doc_a", "doc_b"
     )
     # labels' plan reads the converged stars' checkpoint blocks, so
-    # they must outlive this call — retained for next-dedup-query
-    # eviction.
-    _retain(star_edges)
+    # they must outlive this call — retained until the next query
+    # entry.
+    retain(star_edges)
     return labels.select(F.col("node").alias("doc_id"), "cluster_id")
 
 
@@ -1129,10 +1115,9 @@ def dedup_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # best-of-3 at sf0.1 — 2.06 s uncached vs 1.52 s cached (−27%).
     # Eager count, not lazy: both consumers sit inside ONE job, and a
     # lazy cache makes it a scheduler race whether the second branch
-    # hits warm blocks or re-runs the gram lineage.  Retained per the
-    # module discipline — the next dedup query entry evicts it.
-    _evict_retained()
-    grams = _retain(grams.cache())
+    # hits warm blocks or re-runs the gram lineage.  Retained — the
+    # next query entry evicts it.
+    grams = retain(grams.cache())
     grams.count()
     dup = (
         grams.groupBy("gh")
@@ -1408,8 +1393,7 @@ def dedup_minhash_estimate_certificate(
     candidates as dedup_minhash_lsh (never n²), both sides' rows
     joined onto each pair; est_j reads the mh columns and the exact
     Jaccard the shingle-set sizes."""
-    _evict_retained()
-    docs = _retain(_minhash_docs(spark, sf_dir).cache())
+    docs = retain(_minhash_docs(spark, sf_dir).cache())
     agree = sum(
         F.when(F.col(f"a.mh{s}") == F.col(f"b.mh{s}"), 1).otherwise(0)
         for s in range(NUM_HASHES)
@@ -1579,7 +1563,6 @@ def dedup_edit_distance_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Measured (warm best-of-3, full eviction between runs): 2.47 s at
     sf0.1, 3.87 s at sf1 (α ≈ 0.19) vs the exhaustive twin's 1.54 →
     115.7 s — 30× at sf1 and widening with the square."""
-    _evict_retained()
     # the per-doc table is read once (by the bucket explode): no cache
     cand = _lsh_candidates(_minhash_docs(spark, sf_dir))
     d = load_table(spark, sf_dir, "documents")

@@ -47,20 +47,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ondemand_dask_spark.io import load_table
-from ondemand_dask_spark.operators.checkpoint import RetainedCaches
+from ondemand_dask_spark.operators.checkpoint import retain
 from ondemand_dask_spark.registry import register
 
 _R = 4
-
-# Caches created inside a query must outlive the call (the returned
-# DataFrame is lazy and references them), so they cannot unpersist at
-# function exit.  Same discipline as the dedup family: each cache
-# registers here and the NEXT graph query entry evicts the previous
-# set, so a long driver session retains at most one graph query's
-# storage blocks.
-_CACHES = RetainedCaches()
-_evict_retained = _CACHES.evict
-_retain = _CACHES.retain
 
 # DuckDB twin of the canonical co-purchase edge list: distinct
 # unordered part pairs sharing an order, stored as (src < dst).
@@ -107,51 +97,14 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Bench-only shared edge cache (SPARK_GRAFT_SHARED_EDGES=1): the
-# graph family's five headline queries each rebuild + re-cache the
-# same co-purchase edge list (43% of the r7 headline total was graph,
-# and every query pays the ~1.4 s warm build).  Rebuilding is CORRECT
-# for isolated per-query timing — the driver's correctness runs and
-# the primary bench numbers keep it — but a production session would
-# materialize the edge frame once, so the bench also reports the
-# family under one shared cache (bench.py's graph shared-cache A/B).
-_SHARED_EDGES: dict[str, DataFrame] = {}
-
-
 def _family_edges(
     spark: SparkSession, sf_dir: str, *, cached_default: bool = True
 ) -> DataFrame:
-    """The co-purchase edge frame a graph query starts from.
-
-    Default: freshly built per query; cached + registered with
-    `_retain` when `cached_default` (evicted at the next graph-query
-    entry — the self-contained-timing discipline).  In shared mode
-    the cached frame is memoized per sf_dir, reused across the
-    family, and deliberately NOT registered so per-query eviction
-    leaves it warm; `release_shared_edges()` frees it."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SHARED_EDGES") == "1":
-        df = _SHARED_EDGES.get(sf_dir)
-        # a memoized frame bound to a stopped session fails opaquely
-        # downstream — validate ownership before reuse and rebuild on
-        # the live session instead (bench-only path, cheap to harden)
-        if df is not None and df.sparkSession is not spark:
-            df = None
-        if df is None:
-            df = _edges(spark, sf_dir).cache()
-            df.count()  # materialize once for the whole family
-            _SHARED_EDGES[sf_dir] = df
-        return df
+    """The co-purchase edge frame a graph query starts from: freshly
+    built per query, and cached + retained (released at the next query
+    entry) when `cached_default`."""
     e = _edges(spark, sf_dir)
-    return _retain(e.cache()) if cached_default else e
-
-
-def release_shared_edges() -> None:
-    """Free the bench-mode shared edge cache (all sf_dirs)."""
-    for df in _SHARED_EDGES.values():
-        df.unpersist()
-    _SHARED_EDGES.clear()
+    return retain(e.cache()) if cached_default else e
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -281,12 +234,11 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the window form the oracle runs."""
     from ondemand_dask_spark.operators.rank import global_row_numbers
 
-    _evict_retained()
     edges = _family_edges(spark, sf_dir)
     sym = _sym(edges)
     deg = sym.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("d"))
     rnk = global_row_numbers(
-        deg, "d", "node", col_name="r", retain=_retain
+        deg, "d", "node", col_name="r"
     ).select("node", "r")
     # rank map is |V| rows → broadcast; canonical edges then orient
     # from lower rank to higher with zero additional exchanges.
@@ -306,7 +258,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cache()
     )
-    _retain(oriented)
+    retain(oriented)
     # Materialize the caches EAGERLY before the census job.  Left
     # lazy, the final job populates them mid-flight across its three
     # consuming branches, and whether the branches hit warm blocks or
@@ -468,7 +420,6 @@ def triangle_count_estimate(
         )
     from ondemand_dask_spark.operators.rank import global_row_numbers
 
-    _evict_retained()
     edges = _edges(spark, sf_dir).filter(
         F.pmod(F.xxhash64("src", "dst", F.lit(seed)), F.lit(1_000_000))
         < F.lit(threshold)
@@ -476,7 +427,7 @@ def triangle_count_estimate(
     sym = _sym(edges)
     deg = sym.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("d"))
     rnk = global_row_numbers(
-        deg, "d", "node", col_name="r", retain=_retain
+        deg, "d", "node", col_name="r"
     ).select("node", "r")
     ru = F.broadcast(rnk).alias("ru")
     rv = F.broadcast(rnk).alias("rv")
@@ -503,9 +454,9 @@ def triangle_count_estimate(
     # re-executions.  Interleaved best-of-3 at sf0.1, p=0.3:
     # oriented-cached 3.90 s, +broadcast-adj 3.47 s, vs 4.36 s
     # uncached (−20%).  The rank's localCheckpoint and this cache
-    # are retained, so _evict_retained() at the next query entry
-    # releases the storage blocks instead of leaking them until GC.
-    oriented = _retain(oriented.cache())
+    # are retained, so the next query entry releases the storage
+    # blocks instead of leaking them until GC.
+    oriented = retain(oriented.cache())
     oriented.count()
     return _intersection_census(
         oriented, value_col="n_triangles_est", scale=p**3
@@ -615,9 +566,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     scaled by |V| (mean exactly 1) — scale-free and numerically in a
     range where the repo's standard rounding makes the cross-engine
     check exact."""
-    _evict_retained()
-    sym = _retain(_sym(_family_edges(spark, sf_dir, cached_default=False)).cache())
-    deg = _retain(
+    sym = retain(_sym(_family_edges(spark, sf_dir, cached_default=False)).cache())
+    deg = retain(
         sym.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("d")).cache()
     )
     # |V| as a 1-row broadcast frame — joins into the plan instead of
@@ -729,8 +679,7 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     onto the rule table.  The min-support HAVING prunes BEFORE the
     rule expansion, so low-signal pairs never reach the joins —
     Apriori's pruning principle expressed as plan order."""
-    _evict_retained()
-    li = _retain(
+    li = retain(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
@@ -846,7 +795,6 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle, so the capped semantics hash-check exactly).  Known
     edges leave via an anti join; degrees ride broadcast joins; the
     deterministic top-k lowers to TakeOrderedAndProject."""
-    _evict_retained()
     edges = _family_edges(spark, sf_dir)
     sym = _sym(edges)
     deg = sym.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("d"))
@@ -958,7 +906,6 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     global LAST_KCORE_ROUNDS, LAST_KCORE_CONVERGED
-    _evict_retained()
     edges = _edges(spark, sf_dir).localCheckpoint()
     n_edges = edges.count()
     LAST_KCORE_ROUNDS = 0
@@ -989,7 +936,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             LAST_KCORE_CONVERGED = True
             break  # the remaining graph IS the k-core
         n_edges = n_new
-    _retain(edges)
+    retain(edges)
     nodes = edges.select(F.col("src").alias("node")).unionByName(
         edges.select(F.col("dst").alias("node"))
     )
@@ -1043,7 +990,6 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg groupBys over the labeled edges; m is a 1-row scalar
     attach.  Per-community arithmetic is scalar (no float-sum
     reordering), so the differential check is exact at 4 dp."""
-    _evict_retained()
     edges = _family_edges(spark, sf_dir)
     lab = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("node"), F.col("p_brand").alias("com")
@@ -1169,7 +1115,6 @@ def graph_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     best-of-4 at sf0.1: 5.70 s vs 5.48 s with sym
     repartition(v).cache()): BFS's per-superstep cost is the cached
     2|E| scan, not the reduced-side exchanges."""
-    _evict_retained()
     edges = _family_edges(spark, sf_dir)
     edges.count()  # eager: deg and the relax rounds share the cache
     sym = _sym(edges)
@@ -1194,9 +1139,9 @@ def graph_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
         # expansion.  The lazy pin keeps the query ONE job (first
         # evaluation materializes, the second reads blocks): r14 A/B,
         # interleaved best-of-4 at sf0.1 — 4.78 s unpinned vs 3.95 s
-        # pinned (−17%); retained so the next graph query releases
-        # the blocks.
-        dist = _retain(
+        # pinned (−17%); retained so the next query releases the
+        # blocks.
+        dist = retain(
             dist.unionByName(relax)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
@@ -1282,9 +1227,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_connected_components (a per-round localCheckpoint was
     A/B'd and adds nothing: the broadcast already materializes each
     round exactly once)."""
-    _evict_retained()
     par = spark.sparkContext.defaultParallelism
-    sym = _retain(
+    sym = retain(
         _sym(_family_edges(spark, sf_dir, cached_default=False))
         .repartition(par, "u")
         .cache()
@@ -1357,7 +1301,6 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (six moments per partition cross the wire).  No window, no
     self-join, no data-sized shuffle at all beyond the edge build
     shared by the whole graph family."""
-    _evict_retained()
     edges = _family_edges(spark, sf_dir)
     edges.count()  # eager: sym fans the cache into two union legs
     sym = _sym(edges)
@@ -1446,13 +1389,12 @@ def graph_personalized_pagerank(
     TakeOrderedAndProject (per-partition heaps); the top-k output
     orders on the ROUNDED score with a node-id tiebreak, so the cut
     is engine-deterministic."""
-    _evict_retained()
-    sym = _retain(_sym(_family_edges(spark, sf_dir, cached_default=False)).cache())
+    sym = retain(_sym(_family_edges(spark, sf_dir, cached_default=False)).cache())
     # deg is consumed by seed selection AND every superstep's
     # out-degree divide — pin it once (|V| rows) instead of
     # re-aggregating the cached sym per broadcast (the r14 pagerank
     # fold, applied to the sparse walk).
-    deg = _retain(
+    deg = retain(
         sym.groupBy(F.col("u").alias("node"))
         .agg(F.count("*").alias("d"))
         .cache()

@@ -27,6 +27,7 @@ from pyspark.sql.window import Window
 
 from ondemand_dask_spark.functions.vectors import dot as _dot, l2_norm as _norm
 from ondemand_dask_spark.io import load_table
+from ondemand_dask_spark.operators.checkpoint import retain
 from ondemand_dask_spark.registry import register
 
 _R = 4
@@ -149,7 +150,7 @@ def _signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is 0, so they all pollute one meaningless bucket, and every
     # downstream cosine against them is an undefined 0/0 (ANSI
     # division throws).
-    return (
+    return retain(
         e.select(
             "vec_id",
             "label",
@@ -343,7 +344,7 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
          ).alias("cos"),
     )
     w_assign = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("list_id"))
-    ranked = scored.withColumn("rn", F.row_number().over(w_assign)).cache()
+    ranked = retain(scored.withColumn("rn", F.row_number().over(w_assign)).cache())
     assign = ranked.filter(F.col("rn") == 1).select(
         "vec_id", "embedding", "nrm", "list_id"
     )

@@ -25,16 +25,10 @@ from ondemand_dask_spark.functions.texthash import (
     rolling_fingerprint,
 )
 from ondemand_dask_spark.io import load_table
-from ondemand_dask_spark.operators.checkpoint import RetainedCaches
+from ondemand_dask_spark.operators.checkpoint import retain
 from ondemand_dask_spark.registry import register
 
 _R = 4
-
-# Weight-table cache for the cosine-pairs inverted-index join: evicted
-# at the next entry of that query (same discipline as dedup/graph).
-_CACHES = RetainedCaches()
-_evict_retained = _CACHES.evict
-_retain = _CACHES.retain
 
 # lang → signature substrings (trigram-profile-lite).  Deliberately
 # tiny: the fixture vocabulary is shared across langs, so this tests
@@ -529,7 +523,6 @@ def text_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     a true cosine (≤ 1) of the pruned vectors.  Three token-level
     aggs + one posting-list self-join + two |docs|-row broadcast
     joins for the norms."""
-    _evict_retained()
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
@@ -556,7 +549,7 @@ def text_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cache()
     )
-    _retain(w)
+    retain(w)
     norms = w.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm")
     )

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ondemand_dask_spark.io import load_table
+from ondemand_dask_spark.operators.checkpoint import retain
 from ondemand_dask_spark.registry import register
 
 # Floating aggregates are rounded identically on both engines so the
@@ -617,7 +618,7 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp_ntz"))
     )
     s = load_table(spark, sf_dir, "supplier")
-    revenue = (
+    revenue = retain(
         li.groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(
             F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(

@@ -19,15 +19,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ondemand_dask_spark.io import load_table
-from ondemand_dask_spark.operators.checkpoint import RetainedCaches
 from ondemand_dask_spark.registry import register
 
 _R = 4
-
-# Checkpoint lifecycle for the two-phase global rank's pinned range
-# exchange (sort_global_rank_scalable): retained past the call,
-# released at the next entry — same discipline as dedup/graph.
-_CACHES = RetainedCaches()
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1425,11 +1419,8 @@ def sort_global_rank_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is how set_index/global rank actually ships at 100 TB."""
     from ondemand_dask_spark.operators.rank import global_row_numbers
 
-    _CACHES.evict()
     e = _events(spark, sf_dir).select("event_id", "ts")
-    ranked = global_row_numbers(
-        e, "ts", "event_id", col_name="pos", retain=_CACHES.retain
-    )
+    ranked = global_row_numbers(e, "ts", "event_id", col_name="pos")
     return ranked.select("event_id", "pos")
 
 

@@ -10,10 +10,13 @@ driver does — so local green means driver green.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ondemand_dask_spark.operators.checkpoint import evict_all_retained
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -57,16 +60,27 @@ def register(
     scale_class: str = "production",
     twin: str | None = None,
 ):
-    """Decorator: register a query under `name` with optional oracle SQL."""
+    """Decorator: register a query under `name` with optional oracle SQL.
+
+    The registered `Query.fn` evicts every retained cache/checkpoint
+    (operators/checkpoint.py) on entry, so a session holds at most one
+    query's storage blocks.  The decorator returns the raw function:
+    a query that calls another one directly never evicts mid-query."""
     if scale_class not in _SCALE_CLASSES:
         raise ValueError(f"unknown scale_class {scale_class!r} for {name}")
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
+
+        @functools.wraps(fn)
+        def entry(spark: SparkSession, sf_dir: str) -> DataFrame:
+            evict_all_retained()
+            return fn(spark, sf_dir)
+
         _REGISTRY[name] = Query(
             name=name,
-            fn=fn,
+            fn=entry,
             oracle=oracle,
             doc=doc or (fn.__doc__ or ""),
             scale_class=scale_class,
@@ -96,65 +110,63 @@ def certificate_queries() -> frozenset[str]:
 # module happens to import first.  Everything not listed follows in
 # registration order.
 _SHOWCASE: tuple[str, ...] = (
-    # --- round-15 rotation (generated by tools/rotation.py; the
-    # worklist lives in ROTATION.md and is guard-tested against
-    # CORRECTNESS history).  r14 went 50 full, 0 rows-only, 0
-    # failures - the tenth consecutive clean window.  This window:
-    # zero new registrations (r15 is the second optimization
-    # round - no new query semantics), so all 50 slots re-green
-    # the LEAST-recently-driver-checked queries.  Rows-only twin
-    # adjacency stays derived from the registry `twin` annotation
-    # inside tools/rotation.py.
-    "set_union_schema_evolution",
-    "source_orc_roundtrip",
-    "stat_bootstrap_ci",
-    "stat_kll_quantile_banded",
-    "stat_mann_whitney",
-    "stat_theil_sen_slope",
-    "stat_theta_intersection_banded",
-    "str_predicates",
-    "stream_cdc_upsert",
-    "stream_stream_join",
-    "text_bigram_perplexity",
-    "text_tfidf_cosine_pairs",
-    "udf_cogroup",
-    "udf_map_overlap",
-    "udf_table_function",
-    "window_autocorr_lag1",
-    "window_lag_lead",
-    "agg_hhi_concentration",
-    "array_hof",
-    "dedup_duplicate_spans",
-    "dedup_ngram_containment",
-    "dedup_priority_keep",
-    "dedup_semantic_embedding",
-    "dq_psi_drift",
-    "dq_referential_integrity",
-    "embedding_matryoshka_recall",
-    "events_attribution_last_touch",
-    "events_bot_regularity",
-    "events_markov_transitions",
-    "events_rfm_segmentation",
-    "feature_target_encode_cv",
-    "graph_modularity",
-    "incremental_partial_agg_merge",
-    "join_set_similarity",
-    "math_transcendental",
-    "multimodal_binary_meta",
-    "na_drop",
-    "orders_pareto_concentration",
-    "pipeline_length_bucket_batching",
-    "pipeline_purge_audit",
-    "proj_assign",
-    "sample_n_per_group",
-    "scd2_pit_lookup",
-    "set_union_all",
-    "sort_global_rank_scalable",
-    "source_csv_corrupt_permissive",
-    "source_parquet_merge_schema",
-    "source_python_datasource",
-    "stat_anova_oneway",
-    "stat_spearman_corr",
+    # --- rotation generated by tools/rotation.py (the worklist lives
+    # in ROTATION.md and is guard-tested against CORRECTNESS
+    # history).  The four PRIORITY pins lead: agg_groupby_quantile,
+    # agg_winsorize, dedup_ngram_jaccard, text_keyphrase_rake; the
+    # remaining slots re-green the LEAST-recently-driver-checked
+    # queries.  Rows-only twin adjacency stays derived from the
+    # registry `twin` annotation inside tools/rotation.py.
+    "agg_groupby_quantile",
+    "agg_winsorize",
+    "dedup_ngram_jaccard",
+    "text_keyphrase_rake",
+    "str_replace_extract",
+    "stream_static_join",
+    "text_bm25_topk",
+    "udf_apply_in_pandas",
+    "window_gap_detection",
+    "window_max_drawdown",
+    "agg_count_min_estimate",
+    "agg_groupby_basic",
+    "agg_mode",
+    "agg_salted_skew",
+    "agg_weighted_median",
+    "ann_ivf_probe",
+    "ann_lsh_bucket_stats",
+    "combine_first",
+    "concat_axis1",
+    "dedup_incremental_batch",
+    "encode_cyclic_time",
+    "feature_woe_iv",
+    "graph_bfs_khop",
+    "jdbc_source_plan",
+    "join_bloom_prefilter",
+    "join_fuzzy_entity_resolution",
+    "join_inner",
+    "layout_file_skipping_stats",
+    "layout_zorder_key",
+    "ml_calibration_bins",
+    "ml_eval_logloss",
+    "ml_eval_multiclass",
+    "ml_eval_regression",
+    "multimodal_decode_ppm",
+    "multimodal_image_ahash",
+    "pipeline_chunk_overlap",
+    "pipeline_end_to_end",
+    "pipeline_leakage_free_split",
+    "sample_weighted_reservoir",
+    "set_except",
+    "set_except_all",
+    "snapshot_diff_cdc",
+    "source_from_pandas",
+    "sql_recursive_hierarchy_rollup",
+    "stat_cuped_adjustment",
+    "stat_fdr_bh",
+    "stat_ols_by_group",
+    "str_edit_distance",
+    "stream_foreachbatch_sink",
+    "stream_sliding_agg",
 )
 
 

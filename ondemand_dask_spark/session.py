@@ -2,12 +2,17 @@
 
 The reference (ondemand-dask) provisions a sized, self-expiring Dask
 cluster on demand (SURVEY.md §3.3). The Spark-native analogue is pure
-configuration: one `build_session` helper owns every setting the
-engine depends on, so no query module can forget them:
+configuration: one table, `ENGINE_CONF`, holds every runtime-settable
+setting the engine depends on, and both session entry points apply
+all of it — `build_session` (bench, tests) at startup and
+`ensure_session_conf` on a session someone else built (the driver's) —
+so no query module can forget them and both sessions run the same
+engine:
 
-- `spark.sql.legacy.parquet.nanosAsLong=true`: the `events` table
-  stores `ts` as parquet INT64 TIMESTAMP(NANOS); without the flag
-  Spark 4 refuses the file outright (SURVEY.md §0.5.1).
+- `spark.sql.legacy.parquet.nanosAsLong=true`: some testdata
+  generations store `events.ts` as parquet INT64 TIMESTAMP(NANOS);
+  without the flag Spark 4 refuses the file outright (SURVEY.md
+  §0.5.1).  Runtime-settable, like every key in the table.
 - UTC session timezone: keeps timestamp arithmetic aligned with the
   DuckDB oracle (both naive/UTC).
 - Arrow on: fast toPandas / pandas-UDF exchange.
@@ -28,6 +33,44 @@ import os
 from pyspark.sql import SparkSession
 
 
+# Every runtime-settable engine setting (each reports
+# `spark.conf.isModifiable`).  `spark.sql.shuffle.partitions` is not
+# here: it is the caller's sizing argument to `build_session`.
+ENGINE_CONF: dict[str, str] = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # Spark's default, asserted.  The r6-era "false" (coalesce purely
+    # by the 64MB advisory) was tuned to the sf0.1 bench and starved
+    # every 20-50MB post-shuffle stage down to ONE task at sf1 —
+    # profiled single-task stages of 2-14s with 31 cores idle in
+    # agg_groupby_quantile, text_bm25_topk, text_keyphrase_rake,
+    # dedup_duplicate_spans, window_ewm_bounded, sessionize_gap — and
+    # measured SLOWER even at sf0.1 (8-query interleaved probe: 9.52s
+    # false vs 4.93s true; sf1 18.86 vs 7.83).  parallelismFirst
+    # keeps post-shuffle parallelism at cluster width until partitions
+    # hit minPartitionSize; the advisory byte target still governs
+    # once data is large enough for bytes to matter.
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Dimension tables (region/nation/supplier/part) are tiny at every
+    # SF; raise the auto-broadcast threshold so they always take the
+    # broadcast-hash path even before AQE kicks in.
+    "spark.sql.autoBroadcastJoinThreshold": "64MB",
+    "spark.sql.parquet.filterPushdown": "true",
+}
+
+
+def _positive_int(var: str, value: str) -> int:
+    """`value` of environment variable `var` as a positive int, or a
+    ValueError naming the variable."""
+    if not value.isdigit() or int(value) < 1:
+        raise ValueError(f"{var} must be a positive integer, got {value!r}")
+    return int(value)
+
+
 def build_session(
     app_name: str = "ondemand_dask_spark",
     master: str | None = None,
@@ -39,47 +82,25 @@ def build_session(
     Parameters mirror the reference's ``spawn(name, cpu, ram, ...)``
     knobs where they make sense for Spark: sizing is expressed via
     ``master`` locally and executor configs in cluster mode.
+    ``SPARK_GRAFT_CPUS`` (``*`` or a positive int) and
+    ``SPARK_SHUFFLE_PARTITIONS`` (a positive int) are validated before
+    any Spark conf is set.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+        if cpus != "*":
+            _positive_int("SPARK_GRAFT_CPUS", cpus)
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
+        shuffle_partitions = _positive_int(
+            "SPARK_SHUFFLE_PARTITIONS",
+            os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"),
+        )
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # events.ts is parquet INT64 TIMESTAMP(NANOS,false); Spark 4
-        # throws PARQUET_TYPE_ILLEGAL without this flag.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # r15: back to Spark's DEFAULT (true).  The r6-era "false"
-        # (coalesce purely by the 64MB advisory) was tuned to the
-        # sf0.1 bench and starved every 20-50MB post-shuffle stage
-        # down to ONE task at sf1 — profiled single-task stages of
-        # 2-14s with 31 cores idle in agg_groupby_quantile,
-        # text_bm25_topk, text_keyphrase_rake, dedup_duplicate_spans,
-        # window_ewm_bounded, sessionize_gap — and measured SLOWER
-        # even at sf0.1 (8-query interleaved probe: 9.52s false vs
-        # 4.93s true; sf1 18.86 vs 7.83).  parallelismFirst keeps
-        # post-shuffle parallelism at cluster width until partitions
-        # hit minPartitionSize; the advisory byte target still governs
-        # once data is large enough for bytes to matter — which is
-        # exactly Spark's documented intent for this flag.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_PARALLELISM_FIRST", "true"),
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Dimension tables (region/nation/supplier/part) are tiny at
-        # every SF; raise the auto-broadcast threshold so they always
-        # take the broadcast-hash path even before AQE kicks in.
-        .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         # managed tables (bucketed-join layouts) land in scratch, not
@@ -91,25 +112,14 @@ def build_session(
             ),
         )
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**ENGINE_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
 
 def ensure_session_conf(spark: SparkSession) -> SparkSession:
-    """Apply the engine's runtime-settable configs to a session we did
-    not build (the driver hands us one).  Static configs like the
-    nanos flag cannot be set post-start; `io.load_table` therefore has
-    a pyarrow fallback for `events` (see io.py).
-    """
-    runtime = {
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.adaptive.enabled": "true",
-    }
-    for k, v in runtime.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass
+    """Apply `ENGINE_CONF` to a session we did not build (the driver
+    hands us one), so it runs the engine `build_session` configures."""
+    for k, v in ENGINE_CONF.items():
+        spark.conf.set(k, v)
     return spark

@@ -1,17 +1,23 @@
-"""operators.checkpoint.release_local_checkpoint — the storage truth.
+"""operators.checkpoint — the storage truth and the one lifecycle.
 
-Pins the two facts the helper exists for: (1) plain unpersist() on a
-localCheckpointed frame does NOT free its blocks (if Spark ever fixes
-this, the xfail-style assertion below flags the helper as obsolete);
-(2) the LogicalRDD-level release DOES free them, immediately visible
-in getRDDStorageInfo.
+Pins the two facts `release_local_checkpoint` exists for: (1) plain
+unpersist() on a localCheckpointed frame does NOT free its blocks (if
+Spark ever fixes this, the xfail-style assertion below flags the
+helper as obsolete); (2) the LogicalRDD-level release DOES free them,
+immediately visible in getRDDStorageInfo.  Then the lifecycle built on
+it: `retain` + `evict_all_retained`, called by every registered
+query's entry.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ondemand_dask_spark.operators.checkpoint import release_local_checkpoint
+from ondemand_dask_spark.operators.checkpoint import (
+    evict_all_retained,
+    release_local_checkpoint,
+    retain,
+)
 
 
 def _cached_rdd_ids(spark) -> set[int]:
@@ -47,35 +53,36 @@ def test_release_is_safe_on_non_checkpointed(spark):
     cached.unpersist()
 
 
+def _retain_both(spark) -> set[int]:
+    """Retain one localCheckpoint and one cache; their storage ids."""
+    before = _cached_rdd_ids(spark)
+    retain(spark.range(20_000).localCheckpoint())
+    retain(spark.range(20_000).cache()).count()
+    held = _cached_rdd_ids(spark) - before
+    assert len(held) == 2, "retained frames should hold storage blocks"
+    return held
+
+
 def test_retained_caches_evicts_checkpointed_and_cached(spark):
-    """RetainedCaches.evict must free BOTH kinds of retained frame:
+    """evict_all_retained must free BOTH kinds of retained frame:
     plain caches via unpersist, localCheckpoints via the LogicalRDD
     release (the round-5 ADVICE fix — graph.py's old evict used bare
     unpersist, a silent no-op on its checkpointed k-core edges)."""
-    from ondemand_dask_spark.operators.checkpoint import RetainedCaches
-
-    rc = RetainedCaches()
-    before = _cached_rdd_ids(spark)
-    ck = rc.retain(spark.range(20_000).localCheckpoint())
-    ca = rc.retain(spark.range(20_000).cache())
-    ca.count()
-    held = _cached_rdd_ids(spark) - before
-    assert held, "retained frames should hold storage blocks"
-    rc.evict()
+    held = _retain_both(spark)
+    evict_all_retained()
     assert not (held & _cached_rdd_ids(spark)), (
-        "evict() left retained storage blocks behind"
+        "evict_all_retained() left retained storage blocks behind"
     )
 
 
-def test_module_caches_use_release_aware_eviction():
-    """Every query module with a retain/evict discipline must use the
-    shared RetainedCaches (release-aware) — not a local bare-unpersist
-    copy, which is how the graph.py leak slipped in."""
-    import ondemand_dask_spark.queries.composed as composed
-    import ondemand_dask_spark.queries.dedup as dedup
-    import ondemand_dask_spark.queries.graph as graph
-    import ondemand_dask_spark.queries.text as text
-    from ondemand_dask_spark.operators.checkpoint import RetainedCaches
+def test_module_caches_use_release_aware_eviction(spark, sf_dir):
+    """A registered query's entry is the eviction point: calling any
+    `Query.fn` frees everything retained before it, checkpoints
+    included — no query module keeps a discipline of its own."""
+    from ondemand_dask_spark.registry import all_queries
 
-    for mod in (dedup, graph, text, composed):
-        assert isinstance(mod._CACHES, RetainedCaches), mod.__name__
+    held = _retain_both(spark)
+    all_queries()["tpch_q6"].fn(spark, sf_dir)
+    assert not (held & _cached_rdd_ids(spark)), (
+        "a registered query's entry left retained storage blocks behind"
+    )

@@ -19,7 +19,6 @@ from ondemand_dask_spark.operators.quantile import (
     exact_group_quantiles,
     exact_group_quantiles_auto,
     exact_group_quantiles_ranged,
-    exact_group_quantiles_select,
 )
 
 # (group label, value) rows; values quantized to avoid float-noise
@@ -39,10 +38,9 @@ _rows = st.lists(
     "impl",
     [
         exact_group_quantiles,
-        exact_group_quantiles_select,
         exact_group_quantiles_ranged,
     ],
-    ids=["sort", "select", "ranged"],
+    ids=["sort", "ranged"],
 )
 @given(rows=_rows, q=st.sampled_from([0.0, 0.1, 0.25, 0.5, 0.9, 1.0]))
 @settings(
@@ -82,8 +80,8 @@ def test_choose_path_many_normal_groups_sorts():
 def test_choose_path_few_huge_groups_ranged():
     # 3 groups × ~30B rows: a one-task-per-group window sort
     # serializes; the big-group path is the range-partitioned
-    # distributed rank (r15 — beats the selection path 4.5 vs 12.9 s
-    # at generated sf1, tools/ab_quantile.py)
+    # distributed rank (4.5 vs 13.5 s at generated sf1,
+    # OPTIMIZATION_r15.md)
     assert choose_quantile_path(max_group_rows=30_000_000_000) == "ranged"
     assert choose_quantile_path(MAX_ROWS_PER_SORT_TASK + 1) == "ranged"
 
@@ -98,7 +96,7 @@ def test_auto_dispatches_both_ways_and_stays_exact(spark):
         .apply(lambda s: float(np.percentile(s, 50, method="linear")))
         .sort_index()
     )
-    for threshold in (10_000, 10):  # 10_000 → sort path; 10 → select path
+    for threshold in (10_000, 10):  # 10_000 → sort path; 10 → ranged path
         got = (
             exact_group_quantiles_auto(
                 sdf, ["k"], "v", {"qv": 0.5}, threshold=threshold

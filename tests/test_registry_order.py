@@ -34,12 +34,15 @@ def test_showcase_front_is_new_then_changed_then_stale():
        every green driver row has bounded age.
     """
     window = list(_SHOWCASE)
-    # r15 (second optimization round): zero new registrations and
-    # zero semantics changes, so the window is again 50 pure-LRU
-    # re-certification slots — the front IS the LRU fill (guarded in
-    # full by test_showcase_stale_fill_matches_committed_census
-    # below, with an empty front set).
-    assert window[0] == "set_union_schema_evolution"
+    # zero new registrations; the front is the four PRIORITY pins
+    # (tools/rotation.py) and the rest is the LRU fill, guarded in
+    # full by test_showcase_stale_fill_matches_committed_census below.
+    assert window[:4] == [
+        "agg_groupby_quantile",
+        "agg_winsorize",
+        "dedup_ngram_jaccard",
+        "text_keyphrase_rake",
+    ]
 
 
 def test_showcase_stale_fill_matches_committed_census():
@@ -69,10 +72,10 @@ def test_showcase_stale_fill_matches_committed_census():
             for n in json.load(fh):
                 last[n] = max(last.get(n, 0), rnd)
     qs = all_queries()
-    # r13 window shape: slot 0 is the round's new registration, the
-    # rest is the LRU fill (mirroring tools/rotation.py's stale loop,
-    # including the rows-only → twin adjacency insertion)
-    front = set(_SHOWCASE[:1])
+    # window shape: slots 0-3 are the PRIORITY pins, the rest is the
+    # LRU fill (mirroring tools/rotation.py's stale loop, including
+    # the rows-only → twin adjacency insertion)
+    front = set(_SHOWCASE[:4])
     stale = sorted(
         (n for n in qs if n not in front),
         key=lambda n: (last.get(n, 0), n),
@@ -100,7 +103,7 @@ def test_showcase_stale_fill_matches_committed_census():
         expected.append(n)
         if needs_twin:
             expected.append(twin)
-    assert list(_SHOWCASE[1:]) == expected
+    assert list(_SHOWCASE[4:]) == expected
 
 
 def test_showcase_mostly_full_oracle():

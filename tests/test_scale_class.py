@@ -98,7 +98,7 @@ def test_certificates_have_production_twin_or_probe_evidence():
             # committed probe, named in the query's doc
             import inspect
 
-            src = inspect.getsource(q.fn.__globals__[q.fn.__name__])
+            src = inspect.getsource(inspect.unwrap(q.fn))
             assert "probe" in (q.doc + src), (
                 f"certificate {n} has neither twin nor probe evidence"
             )

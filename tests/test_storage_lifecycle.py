@@ -1,0 +1,110 @@
+"""One storage lifecycle: every cache and checkpoint a registered query
+leaves behind is released by `evict_all_retained`, which the registry
+calls at every query entry — so a long session holds at most one
+query's storage blocks.
+
+The forced-ranged test also closes an oracle gap: the ranged quantile
+path sits past a ~1M-rows-per-group knee no test SF reaches, so the
+chooser (looked up on every call) is patched to pick it.
+"""
+
+from __future__ import annotations
+
+import time
+
+import pytest
+
+from ondemand_dask_spark.operators import quantile
+from ondemand_dask_spark.operators.checkpoint import evict_all_retained
+from ondemand_dask_spark.registry import all_queries
+from tests.compare import assert_results_match
+
+# One registered query per storage site under queries/ (the operator
+# sites in operators/quantile.py and operators/rank.py ride along).
+SWEEP = [
+    "tpch_q15",  # per-supplier revenue cache
+    "pipeline_leakage_free_split",  # pair-list + star checkpoints
+    "ann_lsh_probe",  # signature-table cache
+    "ann_ivf_probe",  # list-assignment ranking cache
+    "text_tfidf_cosine_pairs",  # term-weight cache
+    "agg_groupby_quantile",  # quantile probe's counts cache
+    "stat_spearman_corr",  # global_min_ranks checkpoints
+    "sort_global_rank_scalable",  # global_row_numbers checkpoint
+    "events_rfm_segmentation",  # three chained rank checkpoints
+    "orders_pareto_concentration",  # global_prefix_sums checkpoint
+    "part_skyline_frontier",  # global_prefix_min checkpoint
+    "sql_recursive_sessionize",  # edge-frame checkpoint
+    "dedup_minhash_lsh",  # per-document MinHash cache
+    "dedup_minhash_estimate_certificate",  # its own per-document cache
+    "dedup_ngram_jaccard",  # kept-shingle-instance cache
+    "dedup_duplicate_spans",  # gram cache
+    "dedup_connected_components",  # final-round label checkpoint
+    "dedup_cc_star_contraction",  # converged-star checkpoint
+    "graph_triangle_count",  # edge cache, rank checkpoint, oriented cache
+    "graph_triangle_count_estimate",  # sampled oriented cache
+    "graph_pagerank",  # symmetric-edge + degree caches
+    "graph_personalized_pagerank",  # its own edge + degree caches
+    "graph_label_propagation",  # partitioned symmetric-edge cache
+    "graph_kcore",  # surviving-edge checkpoint
+    "graph_bfs_khop",  # per-round frontier checkpoints
+    "basket_association_rules",  # basket-line cache
+]
+
+
+def _stored(spark) -> set[int]:
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return {i.id() for i in infos if i.numCachedPartitions() > 0}
+
+
+def _still_stored(spark, ids: set[int], timeout: float = 10.0) -> set[int]:
+    """Those of `ids` still in storage once asynchronous removal has had
+    `timeout` seconds to finish."""
+    deadline = time.monotonic() + timeout
+    left = ids & _stored(spark)
+    while left and time.monotonic() < deadline:
+        time.sleep(0.2)
+        left = ids & _stored(spark)
+    return left
+
+
+@pytest.mark.parametrize("name", SWEEP)
+def test_evict_releases_query_storage(spark, sf_dir, name):
+    before = _stored(spark)
+    all_queries()[name].fn(spark, sf_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    created = _stored(spark) - before
+    assert created, f"{name} no longer stores anything; update SWEEP"
+    evict_all_retained()
+    assert not _still_stored(spark, created), (
+        f"{name} left storage blocks that evict_all_retained cannot free"
+    )
+
+
+def test_forced_ranged_quantile_matches_oracle_and_holds_one_call(
+    spark, duck, sf_dir, monkeypatch
+):
+    chosen = []
+    monkeypatch.setattr(
+        quantile,
+        "choose_quantile_path",
+        lambda *a, **k: chosen.append(a) or "ranged",
+    )
+    qs = all_queries()
+    for name in ("agg_groupby_quantile", "agg_winsorize"):
+        got = qs[name].fn(spark, sf_dir).toPandas()
+        assert_results_match(got, duck.execute(qs[name].oracle).fetchdf(), name)
+    assert len(chosen) == 2, "the auto dispatcher no longer consults the chooser"
+
+    before = _stored(spark)
+    per_call = []
+    for _ in range(3):
+        qs["agg_groupby_quantile"].fn(spark, sf_dir).collect()
+        held = _stored(spark) - before
+        per_call.append(held - set().union(*per_call))
+        earlier = set().union(*per_call[:-1])
+        assert not _still_stored(spark, earlier), (
+            "an earlier call's blocks survived the next query entry"
+        )
+    assert per_call[-1], "the ranged path should pin its range exchange"
+    assert _stored(spark) - before == per_call[-1]

@@ -50,12 +50,16 @@ ANCHORS: tuple[str, ...] = ()
 REPRESENT: tuple[str, ...] = ()
 
 # Unconditional picks — taken even if already driver-checked.
-# Refresh each round from VERDICT.md.  r13: empty — no registered
-# query's semantics changed this round (the scale_class/twin
-# annotations and bench HEADLINE membership do not alter results);
-# the round's one new registration (stream_session_dynamic_gap) is
-# never-checked backlog and leads the window via the normal path.
-PRIORITY: tuple[str, ...] = ()
+# Refresh each round from VERDICT.md.  The four queries the roadmap
+# pins to the front of the window: the two quantile queries (ranged
+# path, and their storage now released at the next query entry) and
+# the two r15-reshaped text/dedup hot spots.
+PRIORITY: tuple[str, ...] = (
+    "agg_groupby_quantile",
+    "agg_winsorize",
+    "dedup_ngram_jaccard",
+    "text_keyphrase_rake",
+)
 
 # every module the family-span invariant requires in the window —
 # honored only while the module still has never-checked queries
