@@ -5,7 +5,7 @@ every variant here is designed around its shuffle profile:
 
 - exact:        one hash-groupBy (single shuffle on the digest);
 - MinHash+LSH:  shingle fan-out is a narrow op; the only shuffles are
-                one groupBy(doc) for shingle set + signature, one
+                one doc_id exchange for shingle set + signature, one
                 groupBy(band, sig) for the buckets and the pair
                 distinct — candidate pairs ∝ collisions, never n²;
 - SimHash:      narrow bit fan-out + one groupBy; pairing is blocked;
@@ -63,11 +63,24 @@ def _minhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     one 3-token shingle, (doc_id, hs, mh0..mh{NUM_HASHES-1}).  `hs` is
     the doc's set of 30-bit shingle hashes and `mh{s}` its minimum
     under the s-th affine hash.  One groupBy(doc_id) over the shingle
-    explode yields both, so the only wide op moves (long, long) rows
-    and never shingle strings.  Jaccard over hashed sets equals
-    Jaccard over shingles modulo hash collisions, and the DuckDB
-    oracles hash identically, so differential checks stay exact."""
-    d = load_table(spark, sf_dir, "documents")
+    explode yields both, and shingle rows never cross an exchange.
+    Jaccard over hashed sets equals Jaccard over shingles modulo hash
+    collisions, and the DuckDB oracles hash identically, so
+    differential checks stay exact.
+
+    Width: the cost of this stage is per shingle (explode, md5, set
+    build), not per input byte, and the fixture's documents file is a
+    single parquet row group, so the scan is one task.  A column-only
+    repartition would be coalesced straight back to one task by AQE,
+    which sizes the small exchange (~3 MB at sf0.1) by bytes.  The
+    explicit count (REPARTITION_BY_NUM, never coalesced) spreads the
+    hashing over the cluster's cores, and the groupBy(doc_id) reuses
+    that hash partitioning, so the table costs exactly one exchange,
+    of raw documents rather than partial aggregates (the
+    dedup_edit_distance precedent)."""
+    d = load_table(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism, "doc_id"
+    )
     h30 = _h(F.col("shingle")) % F.lit(1_073_741_824)
     return (
         d.select(
@@ -226,14 +239,19 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash family is cross-engine deterministic and the whole pipeline
     oracle-checks exactly).
 
-    Plan: one cached per-doc table (`_minhash_docs`: shingle-hash set
-    plus signature) feeds the bucket grouping and both verification
-    joins, and the intersection is an array op on the joined row —
-    three exchanges in all (per-doc groupBy, bucket groupBy, pair
-    distinct; pinned in tests/test_plans.py).  A/B against the
-    earlier band-union self-join shape: CHANGES.md.
+    Plan: one checkpointed per-doc table (`_minhash_docs`:
+    shingle-hash set plus signature) feeds the bucket grouping and
+    both verification joins, and the intersection is an array op on
+    the joined row.  The table is built once, eagerly, at cluster
+    width (one exchange); the plan that reads it three times then has
+    two exchanges (bucket groupBy, pair distinct; pinned in
+    tests/test_plans.py).  A lazy `.cache()` would be materialized
+    three times at once: AQE submits the three readers' stages
+    concurrently, each before any has filled the cache, so each
+    computes the per-doc aggregate.  A/B against the earlier
+    band-union self-join shape: CHANGES.md.
     """
-    docs = retain(_minhash_docs(spark, sf_dir).cache())
+    docs = retain(_minhash_docs(spark, sf_dir).localCheckpoint())
     i = F.size(F.array_intersect("a.hs", "b.hs"))
     jac = i.cast("double") / (F.size("a.hs") + F.size("b.hs") - i)
     return (
@@ -1389,11 +1407,11 @@ def dedup_minhash_estimate_certificate(
     the KLL/theta sketch certificates).  Candidate pairs with a
     band collision but zero common shingles get exact = 0 via the
     intersection — exactly the false-positive class the estimate
-    overstates.  Plan: the same cached per-doc table and bucket
+    overstates.  Plan: the same checkpointed per-doc table and bucket
     candidates as dedup_minhash_lsh (never n²), both sides' rows
     joined onto each pair; est_j reads the mh columns and the exact
     Jaccard the shingle-set sizes."""
-    docs = retain(_minhash_docs(spark, sf_dir).cache())
+    docs = retain(_minhash_docs(spark, sf_dir).localCheckpoint())
     agree = sum(
         F.when(F.col(f"a.mh{s}") == F.col(f"b.mh{s}"), 1).otherwise(0)
         for s in range(NUM_HASHES)

@@ -169,13 +169,40 @@ def test_pair_generation_never_cartesian(name, spark, sf_dir):
     assert "CartesianProduct" not in plan, name
 
 
-def test_minhash_lsh_three_exchanges(spark, sf_dir):
-    """MinHash-LSH runs off one cached per-doc table: the per-doc
-    groupBy, the (band, sig) bucket groupBy and the pair distinct are
-    its only exchanges.  Verification joins the small candidate set
-    to that table and intersects shingle-hash arrays on the joined
-    row — no shingle×shingle probe join, no per-doc count join."""
-    assert shuffle_count(_df("dedup_minhash_lsh", spark, sf_dir)) <= 3
+def test_minhash_lsh_reads_checkpointed_docs(spark, sf_dir):
+    """MinHash-LSH runs off one per-doc table, checkpointed before the
+    plan that reads it three times: the (band, sig) bucket groupBy
+    and the pair distinct are that plan's only exchanges, and no
+    reader scans a lazy cache (three concurrent readers of one would
+    each compute it).  Verification joins the small candidate set to
+    that table and intersects shingle-hash arrays on the joined row —
+    no shingle×shingle probe join, no per-doc count join."""
+    from ondemand_dask_spark.plans import plan_string
+
+    df = _df("dedup_minhash_lsh", spark, sf_dir)
+    assert shuffle_count(df) == 2
+    assert "InMemoryTableScan" not in plan_string(df)
+
+
+def test_minhash_docs_one_exchange_at_cluster_width(spark, sf_dir):
+    """The per-doc MinHash table costs one exchange: an explicit-width
+    hash repartition on doc_id (REPARTITION_BY_NUM, so AQE cannot
+    coalesce the per-shingle work back to one task), which the
+    groupBy(doc_id) then reuses."""
+    import re
+
+    from ondemand_dask_spark.plans import plan_string
+    from ondemand_dask_spark.queries import dedup
+
+    df = dedup._minhash_docs(spark, sf_dir)
+    assert shuffle_count(df) == 1
+    width = spark.sparkContext.defaultParallelism
+    args = re.findall(r"Arguments: (hashpartitioning\(.*)", plan_string(df))
+    assert len(args) == 1, args
+    assert re.match(
+        rf"hashpartitioning\(doc_id#\d+L, {width}\), REPARTITION_BY_NUM\b",
+        args[0],
+    ), args[0]
 
 
 def test_new_scalar_paths_jvm(spark, sf_dir):

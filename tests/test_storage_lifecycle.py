@@ -34,8 +34,8 @@ SWEEP = [
     "orders_pareto_concentration",  # global_prefix_sums checkpoint
     "part_skyline_frontier",  # global_prefix_min checkpoint
     "sql_recursive_sessionize",  # edge-frame checkpoint
-    "dedup_minhash_lsh",  # per-document MinHash cache
-    "dedup_minhash_estimate_certificate",  # its own per-document cache
+    "dedup_minhash_lsh",  # per-document MinHash checkpoint
+    "dedup_minhash_estimate_certificate",  # its own per-document checkpoint
     "dedup_ngram_jaccard",  # kept-shingle-instance cache
     "dedup_duplicate_spans",  # gram cache
     "dedup_connected_components",  # final-round label checkpoint
