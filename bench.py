@@ -466,9 +466,9 @@ def main() -> None:
         # Self-contained timing: drop cached tables left by previous
         # queries (minhash/LSH cache intermediates) so no query is
         # timed under another's memory pressure or warm cache.
-        # evict_all_retained frees retained caches and pinned
-        # localCheckpoints (every registered query also does so on
-        # entry; calling it here keeps the release off the clock).
+        # evict_all_retained frees retained localCheckpoints (every
+        # registered query also does so on entry; calling it here
+        # keeps the release off the clock).
         # r7 adjacency measurement for the r6 "dedup_minhash_lsh
         # +15%" flag: isolated best-of-5 = 1.76 s
         # (exactly the r6 number — no real regression; r5's 1.54 s

@@ -78,7 +78,6 @@ def connected_components_star(
     dst: str = "dst",
     max_rounds: int = 32,
     stats: dict | None = None,
-    contractions_per_checkpoint: int = 1,
 ) -> tuple[DataFrame, DataFrame]:
     """Labels for the graph `edges[(src, dst)]` by star contraction.
 
@@ -102,34 +101,17 @@ def connected_components_star(
     rounds = 0
     converged = False
     while rounds < max_rounds:
-        # `contractions_per_checkpoint` rounds per checkpoint+
-        # checksum: each round is cheap declarative work (2 aggs +
-        # 2 joins) but every checkpoint materialization and checksum
-        # is a full job; batching trades wasted no-op rounds past the
-        # fixpoint (a contraction of a converged star set is a no-op,
-        # so correctness is unaffected) against job count.  The
-        # batched lineage stays constant-size between checkpoints.
-        # r8 interleaved A/B on dedup_connected_components at sf0.1
-        # (one warm session, 4 rounds): cpc=1 2.36 s, cpc=2 2.36 s,
-        # cpc=3 2.57 s best-of-4 — a wash; the pair-graph build, not
-        # per-round job overhead, dominates at this shape, so the
-        # default stays 1 (finest convergence granularity).  The knob
-        # remains for deep-chain topologies where checkpoint count
-        # scales with diameter (see tools/probe_star_cc.py).
-        # never run past the max_rounds CONTRACTION budget: the knob
-        # batches checkpoints, it must not multiply the bound
-        batch = min(contractions_per_checkpoint, max_rounds - rounds)
-        new_edges = cur_edges
-        for _ in range(batch):
-            new_edges = _small_star(_large_star(new_edges))
-        new_edges = new_edges.localCheckpoint()
+        # one contraction per checkpoint + checksum: the finest
+        # convergence granularity.  Batching several contractions per
+        # checkpoint was A/B'd on dedup_connected_components at sf0.1
+        # (r8, one warm session: 1, 2, 3 per checkpoint → 2.36, 2.36,
+        # 2.57 s best-of-4) and is a wash — the pair-graph build, not
+        # per-round job overhead, dominates.
+        new_edges = _small_star(_large_star(cur_edges)).localCheckpoint()
         cur = _checksum(new_edges)
         release_local_checkpoint(cur_edges)
         cur_edges = new_edges
-        # rounds counts EXECUTED contractions; with batch > 1 up to
-        # batch-1 of the last batch may be past-fixpoint no-ops (we
-        # only checksum at batch ends — the documented trade)
-        rounds += batch
+        rounds += 1
         if cur == prev:
             converged = True
             break

@@ -38,7 +38,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ondemand_dask_spark.operators.checkpoint import retain
+from ondemand_dask_spark.operators.checkpoint import (
+    release_local_checkpoint,
+    retain,
+)
 
 
 def _h(q: float):
@@ -108,7 +111,7 @@ def _sort_path(
             "__n", F.count("*").over(Window.partitionBy(*keys))
         )
     else:
-        # Auto-dispatch probe already materialized (and cached) the
+        # Auto-dispatch probe already materialized (and checkpointed) the
         # per-group counts — reuse them.  No forced broadcast on the
         # join: counts has one row PER GROUP, unbounded at scale — a
         # broadcast hint would collect it to the driver regardless of
@@ -203,7 +206,7 @@ def exact_group_quantiles_auto(
     """Exact grouped quantiles with runtime path selection.
 
     Probes group sizes with the same partial-agg count the sort path
-    needs anyway (cached, so choosing 'sort' reuses it — the probe
+    needs anyway (checkpointed, so choosing 'sort' reuses it — the probe
     adds one tiny aggregate over the counts table, not a rescan), then
     dispatches per `choose_quantile_path`: many-normal-groups → sort
     path; few-huge-groups → ranged path, whose range-partitioned
@@ -217,7 +220,7 @@ def exact_group_quantiles_auto(
     blocking action; cheap absolutely, but a measurable fraction of
     small queries.
 
-    The probe's counts cache outlives this call (the returned lazy
+    The probe's counts checkpoint outlives this call (the returned lazy
     DataFrame reuses it), so it is registered with `checkpoint.retain`
     and released at the next query entry."""
     if path == "ranged":
@@ -227,12 +230,16 @@ def exact_group_quantiles_auto(
     d = df.select(*keys, F.col(col).cast("double").alias("__v")).filter(
         F.col("__v").isNotNull()
     )
-    counts = d.groupBy(*keys).agg(F.count("*").alias("__n")).cache()
+    # lazy, not pin: the probe's .first() reads it alone first
+    counts = (
+        d.groupBy(*keys).agg(F.count("*").alias("__n"))
+        .localCheckpoint(eager=False)
+    )
     row = counts.agg(F.max("__n").alias("mx")).first()
     mx = int(row["mx"]) if row and row["mx"] is not None else 0
     if choose_quantile_path(mx, threshold) == "ranged":
-        counts.unpersist()
+        release_local_checkpoint(counts)
         return exact_group_quantiles_ranged(df, keys, col, qs)
-    # sort path reuses the cached counts the probe just materialized
+    # sort path reuses the counts the probe just materialized
     return _sort_path(d, retain(counts), keys, qs)
 

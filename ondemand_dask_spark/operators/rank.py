@@ -39,7 +39,7 @@ def global_row_numbers(
     """Append 1-based global positions ordered by `keys` (must form a
     total order) without a single-task global window.
 
-    The pid-stamped, locally-numbered frame is PINNED with a lazy
+    The pid-stamped, locally-numbered frame is held in a lazy
     localCheckpoint before it branches into (a) the per-partition
     count table and (b) the row-number side of the final join: both
     consumers must read ONE materialization of the range exchange.
@@ -84,6 +84,7 @@ def global_row_numbers(
         *keys
     )
     local = ranged.withColumn("__mid", F.monotonically_increasing_id())
+    # lazy, not pin: the broadcast offsets build reads it alone first
     local = retain(local.localCheckpoint(eager=False))
     pid = F.shiftright(F.col("__mid"), 33).alias("__ods_pid")
     counts = local.groupBy(pid).agg(
@@ -153,8 +154,9 @@ def global_prefix_sums(
     local = with_pid.withColumn(
         "__rn", F.row_number().over(w_local)
     ).withColumn("__cs", F.sum(value_col).over(w_run))
-    # pin the range exchange: counts and the final join must read ONE
-    # materialization (see global_row_numbers).
+    # store the range exchange: counts and the final join must read ONE
+    # materialization (see global_row_numbers).  Lazy, not pin: the
+    # broadcast offsets build reads it alone first.
     local = retain(local.localCheckpoint(eager=False))
     counts = local.groupBy("__ods_pid").agg(
         F.count("*").alias("__cnt"), F.sum(value_col).alias("__sum")
@@ -240,8 +242,9 @@ def global_prefix_min(
     local = with_pid.withColumn(
         "__lm", F.min(value_col).over(w_strict)
     )
-    # pin the range exchange: the per-partition min table and the
+    # store the range exchange: the per-partition min table and the
     # final join must read ONE materialization (see global_row_numbers).
+    # Lazy, not pin: the broadcast offsets build reads it alone first.
     local = retain(local.localCheckpoint(eager=False))
     mins = local.groupBy("__ods_pid").agg(F.min(value_col).alias("__pm"))
     w_off = Window.orderBy("__ods_pid").rowsBetween(

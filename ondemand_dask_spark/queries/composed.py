@@ -35,7 +35,7 @@ from pyspark.sql.window import Window
 
 from ondemand_dask_spark.io import load_table
 from ondemand_dask_spark.operators.asof import merge_asof
-from ondemand_dask_spark.operators.checkpoint import retain
+from ondemand_dask_spark.operators.checkpoint import pin
 from ondemand_dask_spark.registry import register
 
 _R = 4
@@ -688,14 +688,14 @@ def sql_recursive_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    ev = retain(e.select(
+    ev = pin(e.select(
         "event_id", "user_id", "ts", "value",
         F.lag("event_id").over(w).alias("prev_id"),
         (
             F.unix_micros(F.col("ts").cast("timestamp"))
             - F.unix_micros(F.lag("ts").over(w).cast("timestamp"))
         ).alias("gap_us"),
-    ).localCheckpoint())
+    ))
     ev.createOrReplaceTempView("rs_events")
     gap_us = 30 * 60 * 1_000_000
     return spark.sql(f"""

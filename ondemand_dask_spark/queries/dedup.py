@@ -39,7 +39,7 @@ from ondemand_dask_spark.functions.texthash import (
     shingles as _shingle_array,
 )
 from ondemand_dask_spark.io import load_table
-from ondemand_dask_spark.operators.checkpoint import retain
+from ondemand_dask_spark.operators.checkpoint import pin, retain
 from ondemand_dask_spark.operators.graphcc import (
     connected_components_minlabel,
     connected_components_star,
@@ -245,13 +245,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the joined row.  The table is built once, eagerly, at cluster
     width (one exchange); the plan that reads it three times then has
     two exchanges (bucket groupBy, pair distinct; pinned in
-    tests/test_plans.py).  A lazy `.cache()` would be materialized
+    tests/test_plans.py).  A lazy cache would be materialized
     three times at once: AQE submits the three readers' stages
     concurrently, each before any has filled the cache, so each
     computes the per-doc aggregate.  A/B against the earlier
     band-union self-join shape: CHANGES.md.
     """
-    docs = retain(_minhash_docs(spark, sf_dir).localCheckpoint())
+    docs = pin(_minhash_docs(spark, sf_dir))
     i = F.size(F.array_intersect("a.hs", "b.hs"))
     jac = i.cast("double") / (F.size("a.hs") + F.size("b.hs") - i)
     return (
@@ -601,7 +601,7 @@ def _ngram_pair_scores(spark: SparkSession, sf_dir: str):
     Caching `inst` instead was A/B'd and lost locally (sf0.1 1.67 s
     vs 1.66, sf1 2.59 vs 2.04 — cache write exceeds the re-shingle
     cost when the whole corpus sits in page cache); on a cluster
-    whose scan is remote-I/O-bound, `inst.cache()` (16 B/instance,
+    whose scan is remote-I/O-bound, `pin(inst)` (16 B/instance,
     ≈ the text's own footprint) is the one-line knob to flip the
     trade the other way."""
     docs = load_table(spark, sf_dir, "documents")
@@ -656,7 +656,7 @@ def _ngram_pair_scores(spark: SparkSession, sf_dir: str):
     # linearly with a hot shingle's df; this build's aggregation
     # stages stay flat.  The kept INSTANCES are what both downstream
     # branches (per-doc counts, lang regroup) consume, so that is
-    # what the cache pins — bounded rows.
+    # what is pinned — bounded rows.
     raw = inst.groupBy("h").agg(F.count("*").alias("rc"))
     suspect = (
         raw.crossJoin(F.broadcast(total))
@@ -681,10 +681,8 @@ def _ngram_pair_scores(spark: SparkSession, sf_dir: str):
         .filter(F.col("df") <= thresh)
         .select("h")
     )
-    kept_inst = retain(
-        safe_kept.unionByName(
-            sus_uniq.join(sus_keep, "h", "left_semi")
-        ).cache()
+    kept_inst = pin(
+        safe_kept.unionByName(sus_uniq.join(sus_keep, "h", "left_semi"))
     )
     counts = kept_inst.groupBy("doc_id").agg(F.count("*").alias("n"))
     # lang is a BLOCKING key downstream: the oracle's x.lang = y.lang
@@ -1127,16 +1125,14 @@ def dedup_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # grams feeds TWO plan branches — the cross-doc frequency agg and
     # the hit-span probe — so without a pin the posexplode + md5 gram
-    # hash lineage executes once per branch.  One eager cache of the
+    # hash lineage executes once per branch.  One pin of the
     # fixed-width (doc_id, s, e, gh) rows (≈32 B/gram, the md5 work
     # paid once) serves both: r14 A/B, one warm session, interleaved
-    # best-of-3 at sf0.1 — 2.06 s uncached vs 1.52 s cached (−27%).
-    # Eager count, not lazy: both consumers sit inside ONE job, and a
-    # lazy cache makes it a scheduler race whether the second branch
-    # hits warm blocks or re-runs the gram lineage.  Retained — the
-    # next query entry evicts it.
-    grams = retain(grams.cache())
-    grams.count()
+    # best-of-3 at sf0.1 — 2.06 s unstored vs 1.52 s stored (−27%).
+    # Eager: both consumers sit inside ONE job, and a lazy pin makes
+    # it a scheduler race whether the second branch hits warm blocks
+    # or re-runs the gram lineage.
+    grams = pin(grams)
     dup = (
         grams.groupBy("gh")
         .agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"))
@@ -1411,7 +1407,7 @@ def dedup_minhash_estimate_certificate(
     candidates as dedup_minhash_lsh (never n²), both sides' rows
     joined onto each pair; est_j reads the mh columns and the exact
     Jaccard the shingle-set sizes."""
-    docs = retain(_minhash_docs(spark, sf_dir).localCheckpoint())
+    docs = pin(_minhash_docs(spark, sf_dir))
     agree = sum(
         F.when(F.col(f"a.mh{s}") == F.col(f"b.mh{s}"), 1).otherwise(0)
         for s in range(NUM_HASHES)

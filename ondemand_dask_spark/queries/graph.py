@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ondemand_dask_spark.io import load_table
-from ondemand_dask_spark.operators.checkpoint import retain
+from ondemand_dask_spark.operators.checkpoint import pin, retain
 from ondemand_dask_spark.registry import register
 
 _R = 4
@@ -97,22 +97,12 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _family_edges(
-    spark: SparkSession, sf_dir: str, *, cached_default: bool = True
-) -> DataFrame:
-    """The co-purchase edge frame a graph query starts from: freshly
-    built per query, and cached + retained (released at the next query
-    entry) when `cached_default`."""
-    e = _edges(spark, sf_dir)
-    return retain(e.cache()) if cached_default else e
-
-
 def _sym(edges: DataFrame) -> DataFrame:
     """Symmetrize canonical edges into both directions (u, v).
 
     One explode over a 2-struct array instead of a self-union: the
     union form evaluates the EDGE-BUILD LINEAGE once per leg whenever
-    the input is uncached (AQE defers exchange reuse to runtime and
+    the input is unpinned (AQE defers exchange reuse to runtime and
     the bench plans showed both legs' self-join + distinct subtrees
     materialized separately), while the explode form is a narrow op
     over one pass of the build.  Same row multiset — (src,dst) pairs
@@ -234,7 +224,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the window form the oracle runs."""
     from ondemand_dask_spark.operators.rank import global_row_numbers
 
-    edges = _family_edges(spark, sf_dir)
+    edges = pin(_edges(spark, sf_dir))
     sym = _sym(edges)
     deg = sym.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("d"))
     rnk = global_row_numbers(
@@ -256,20 +246,13 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.col("s.src"))
             .alias("hi"),
         )
-        .cache()
     )
-    retain(oriented)
-    # Materialize the caches EAGERLY before the census job.  Left
-    # lazy, the final job populates them mid-flight across its three
-    # consuming branches, and whether the branches hit warm blocks or
-    # race to recompute the lineage is a scheduler accident — measured
-    # BIMODAL at sf0.1: ~5 s when the reuse wins, ~19-20 s (4x) when
-    # it doesn't (8 runs: 5 fast / 3 slow).  Two cheap counts pin the
-    # fast path deterministically: edges first (also consumed by the
-    # degree/rank side), then oriented on top of the warm edge cache.
-    edges.count()
-    oriented.count()
-    return _intersection_census(oriented)
+    # Both pins are eager: left lazy, the census job fills them
+    # mid-flight across its three consuming branches, and whether the
+    # branches hit warm blocks or recompute the lineage is a scheduler
+    # accident — measured BIMODAL at sf0.1: ~5 s when the reuse wins,
+    # ~19-20 s (4x) when it doesn't (8 runs: 5 fast / 3 slow).
+    return _intersection_census(pin(oriented))
 
 
 def _intersection_census(
@@ -294,11 +277,11 @@ def _intersection_census(
     Phase profile pins the remaining cost where it belongs: the
     two adjacency-attach joins + array_intersect are ~6 s of the
     query alone — the intrinsic compute, not a plan artifact.
-    r9 A/B of that intrinsic cost (tools/ab_triangle.py, exclusive
-    sf0.1, interleaved best-of-3, identical 20k-row census pinned
-    first): the challenger — explode adj(lo) into (lo, hi, w)
-    wedge rows and sort-merge them against the oriented edge set
-    on (hi, w) — measured 8.97 s vs this form's 6.49 s (+38%):
+    r9 A/B of that intrinsic cost (commit d0c5800 and SURVEY.md's
+    round-9 account; exclusive sf0.1, interleaved best-of-3,
+    identical 20k-row census checked first): the challenger —
+    explode adj(lo) into (lo, hi, w) wedge rows and sort-merge them
+    against the oriented edge set on (hi, w) — measured 8.97 s vs this form's 6.49 s (+38%):
     the wedge rows pay a shuffle of sum-over-edges outdeg(lo)
     rows for the same membership tests the in-row intersection
     does inside one fused stage.  REJECTED; same discipline as
@@ -311,7 +294,7 @@ def _intersection_census(
     # otherwise stages both attaches as SortMergeJoins — Exchange +
     # Sort of the oriented edges twice — and leaves the conversion to
     # AQE's runtime estimate.  r14 A/B (interleaved best-of-3, sf0.1,
-    # p=0.3 estimator): broadcast-adj + eager-cached oriented 3.47 s
+    # p=0.3 estimator): broadcast-adj + eager-pinned oriented 3.47 s
     # vs 4.36 s declarative (−20%); billion-node graphs drop the hint
     # and return to the keyed join.
     adj = _broadcast_vec(
@@ -444,22 +427,17 @@ def triangle_count_estimate(
             .alias("hi"),
         )
     )
-    # r14 re-A/B of the cache choreography: the r12 A/B (uncached
+    # r14 re-A/B of the storage choreography: the r12 A/B (unpinned
     # 4.7 s vs 6.6 s with the exact census' edges+oriented eager
-    # double-pin) rejected caching — but pinning ONLY oriented is a
-    # different trade: the census consumes oriented from three plan
-    # branches (adjacency build + two attach probes), and with the
+    # double-pin) rejected storing anything — but pinning ONLY oriented
+    # is a different trade: the census consumes oriented from three
+    # plan branches (adjacency build + two attach probes), and with the
     # explode-based _sym the lineage behind it is one pass, so one
-    # eager cache of the p-scaled edge set replaces three
-    # re-executions.  Interleaved best-of-3 at sf0.1, p=0.3:
-    # oriented-cached 3.90 s, +broadcast-adj 3.47 s, vs 4.36 s
-    # uncached (−20%).  The rank's localCheckpoint and this cache
-    # are retained, so the next query entry releases the storage
-    # blocks instead of leaking them until GC.
-    oriented = retain(oriented.cache())
-    oriented.count()
+    # eager pin of the p-scaled edge set replaces three re-executions.
+    # Interleaved best-of-3 at sf0.1, p=0.3: oriented-pinned 3.90 s,
+    # +broadcast-adj 3.47 s, vs 4.36 s unpinned (−20%).
     return _intersection_census(
-        oriented, value_col="n_triangles_est", scale=p**3
+        pin(oriented), value_col="n_triangles_est", scale=p**3
     )
 
 
@@ -538,7 +516,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph' measure (here: central parts of the co-purchase graph).
     Each iteration BROADCASTS the combined |V|-row (node, pr, d)
     vector onto the out-edge list — deg folded into the rank vector
-    so a superstep is ONE BroadcastHashJoin probe of the cached sym
+    so a superstep is ONE BroadcastHashJoin probe of the pinned sym
     plus one groupBy(dst) partial-agg sum: sym is never exchanged or
     sorted in any iteration.  |V| enters via a 1-row broadcast; no
     scalar is ever collected to the driver, so the whole 3-iteration
@@ -556,7 +534,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.01): 6.01 s registered vs 4.24 s broadcast-vector (−29%),
     plan 26 → 12 Exchanges / 3 → 0 SortMergeJoins
     (plans/r14/graph_pagerank_{before,after}.txt).  LPA's r8
-    zero-exchange-round rewrite (pre-partitioned cached sym) still
+    zero-exchange-round rewrite (pre-partitioned pinned sym) still
     LOSES here — 4.88 s vs 5.84 s (tools/ab_lpa_partitioned.py) —
     because one saved groupBy exchange per iteration does not repay
     caching 2|E| pre-partitioned rows up front.  At billion-node |V|
@@ -566,10 +544,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     scaled by |V| (mean exactly 1) — scale-free and numerically in a
     range where the repo's standard rounding makes the cross-engine
     check exact."""
-    sym = retain(_sym(_family_edges(spark, sf_dir, cached_default=False)).cache())
-    deg = retain(
-        sym.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("d")).cache()
-    )
+    sym = pin(_sym(_edges(spark, sf_dir)))
+    deg = pin(sym.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("d")))
     # |V| as a 1-row broadcast frame — joins into the plan instead of
     # a driver-side .first() so the query stays a single lazy plan.
     nn = deg.agg(F.count("*").alias("n"))
@@ -679,12 +655,11 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     onto the rule table.  The min-support HAVING prunes BEFORE the
     rule expansion, so low-signal pairs never reach the joins —
     Apriori's pruning principle expressed as plan order."""
-    li = retain(
+    li = pin(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
         .repartition(spark.sparkContext.defaultParallelism, "l_orderkey")
-        .cache()
     )
     a, b = li.alias("a"), li.alias("b")
     pair_sup = (
@@ -795,7 +770,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle, so the capped semantics hash-check exactly).  Known
     edges leave via an anti join; degrees ride broadcast joins; the
     deterministic top-k lowers to TakeOrderedAndProject."""
-    edges = _family_edges(spark, sf_dir)
+    edges = pin(_edges(spark, sf_dir))
     sym = _sym(edges)
     deg = sym.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("d"))
     hubs = sym.join(
@@ -990,7 +965,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg groupBys over the labeled edges; m is a 1-row scalar
     attach.  Per-community arithmetic is scalar (no float-sum
     reordering), so the differential check is exact at 4 dp."""
-    edges = _family_edges(spark, sf_dir)
+    edges = pin(_edges(spark, sf_dir))
     lab = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("node"), F.col("p_brand").alias("com")
     )
@@ -1091,7 +1066,7 @@ def graph_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     heaps + a k-row merge — no global window even at data-sized |V|).
 
     MIN-DIST RELAXATION supersteps (r14): each round broadcasts the
-    |V|-bounded distance vector onto the cached 2|E| edge list and
+    |V|-bounded distance vector onto the pinned 2|E| edge list and
     folds the relaxed neighbors back with one partial-agg
     groupBy(node).min(dist) — the oracle's own unrolled form, ONE
     lazy plan with no per-round distinct, anti-join, or checkpoint.
@@ -1101,7 +1076,8 @@ def graph_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     but at k = 3 over a co-purchase graph whose reached set is
     dimension-sized the delta machinery's fixed per-round stages
     cost more than the re-relaxation they avoid: r14 A/B
-    (tools/ab_bfs_r14.py, interleaved, identity-checked at sf0.01,
+    (OPTIMIZATION_r14.md, "graph_bfs_khop — broadcast min-dist
+    relaxation rounds"; interleaved, identity-checked at sf0.01,
     two sessions at sf0.1) measured relax 4.12/4.93 s vs
     frontier-delta 5.18/5.23 s best-of-session (−6 to −20%), with
     an explicitly-broadcast delta variant slower still.  At 100 TB
@@ -1112,11 +1088,10 @@ def graph_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The LPA zero-exchange rewrite was A/B'd here too and is a WASH
     (tools/ab_bfs_partitioned.py, one warm session, interleaved
-    best-of-4 at sf0.1: 5.70 s vs 5.48 s with sym
-    repartition(v).cache()): BFS's per-superstep cost is the cached
+    best-of-4 at sf0.1: 5.70 s vs 5.48 s with sym repartitioned on
+    v and stored): BFS's per-superstep cost is the stored
     2|E| scan, not the reduced-side exchanges."""
-    edges = _family_edges(spark, sf_dir)
-    edges.count()  # eager: deg and the relax rounds share the cache
+    edges = pin(_edges(spark, sf_dir))
     sym = _sym(edges)
     deg = sym.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("d"))
     src = (
@@ -1131,16 +1106,14 @@ def graph_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumnRenamed("node", "u"),
             "u"
         ).select(F.col("v").alias("node"), (F.col("dist") + 1).alias("dist"))
-        # pin each round's vector with a LAZY localCheckpoint: dist is
+        # store each round's vector in a LAZY localCheckpoint: dist is
         # referenced twice per round (the broadcast probe and the
         # union leg), and a BroadcastExchange does not share
-        # evaluation with a plain subtree — unpinned, the recursion
+        # evaluation with a plain subtree — unstored, the recursion
         # evaluates round r-1 twice per reference, a 2^hops lineage
-        # expansion.  The lazy pin keeps the query ONE job (first
-        # evaluation materializes, the second reads blocks): r14 A/B,
-        # interleaved best-of-4 at sf0.1 — 4.78 s unpinned vs 3.95 s
-        # pinned (−17%); retained so the next query releases the
-        # blocks.
+        # expansion.  r14 A/B, interleaved best-of-4 at sf0.1 —
+        # 4.78 s unstored vs 3.95 s stored (−17%).  Lazy, not pin:
+        # the next round's broadcast build reads it alone first.
         dist = retain(
             dist.unionByName(relax)
             .groupBy("node")
@@ -1208,7 +1181,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_by 8.2 s, −28%).
 
     ZERO-EXCHANGE ROUNDS (r8): the symmetric edge list is hash-
-    partitioned on u once, cached, and the u→node alias is projected
+    partitioned on u once, pinned, and the u→node alias is projected
     BEFORE each groupBy — HashPartitioning(u) then satisfies the
     ClusteredDistribution of BOTH per-round aggregates (grouping
     keys ⊇ partition key), and the broadcast join preserves the
@@ -1222,18 +1195,24 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite LOSES on graph_pagerank (4.88 → 5.84 s): its rank join
     is AQE-broadcast against the lazily-derived sym, and one saved
     exchange per iteration does not repay the upfront
-    repartition+cache of 2|E| rows — LPA repays it 6×.  Deeper
+    repartition+pin of 2|E| rows — LPA repays it 6×.  Deeper
     horizons switch to the checkpointed-iteration pattern used by
     dedup_connected_components (a per-round localCheckpoint was
     A/B'd and adds nothing: the broadcast already materializes each
     round exactly once)."""
     par = spark.sparkContext.defaultParallelism
-    sym = retain(
-        _sym(_family_edges(spark, sf_dir, cached_default=False))
-        .repartition(par, "u")
-        .cache()
-    )
-    sym.count()  # materialize once; every round reads the warm cache
+    # The rounds need the pin to keep HashPartitioning(u), and a
+    # checkpoint of an adaptive plan reports unknown partitioning
+    # (AdaptiveSparkPlanExec exposes none), which put 2 exchanges back
+    # into every round: sf0.1 5.8-6.9 s → 7.8-11.9 s.  So this one pin
+    # is planned with AQE off; its plan is explicit repartitions and a
+    # distinct, and the query that reads it runs adaptive as usual.
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        sym = pin(_sym(_edges(spark, sf_dir)).repartition(par, "u"))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
     labels = (
         sym.select(F.col("u").alias("node"))
         .distinct()
@@ -1256,7 +1235,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         # max_by over struct(c, -lbl) is deterministic here because
         # (c, lbl) is unique within a node group — no window, no
         # per-node sort; both aggregates run exchange-free on the
-        # u-partitioned cache.
+        # u-partitioned pin.
         labels = cnt.groupBy("node").agg(
             F.max_by("lbl", F.struct(F.col("c"), -F.col("lbl"))).alias(
                 "lbl"
@@ -1301,8 +1280,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (six moments per partition cross the wire).  No window, no
     self-join, no data-sized shuffle at all beyond the edge build
     shared by the whole graph family."""
-    edges = _family_edges(spark, sf_dir)
-    edges.count()  # eager: sym fans the cache into two union legs
+    edges = pin(_edges(spark, sf_dir))
     sym = _sym(edges)
     deg = sym.groupBy(F.col("u").alias("node")).agg(
         F.count("*").cast("double").alias("d")
@@ -1389,16 +1367,12 @@ def graph_personalized_pagerank(
     TakeOrderedAndProject (per-partition heaps); the top-k output
     orders on the ROUNDED score with a node-id tiebreak, so the cut
     is engine-deterministic."""
-    sym = retain(_sym(_family_edges(spark, sf_dir, cached_default=False)).cache())
+    sym = pin(_sym(_edges(spark, sf_dir)))
     # deg is consumed by seed selection AND every superstep's
     # out-degree divide — pin it once (|V| rows) instead of
-    # re-aggregating the cached sym per broadcast (the r14 pagerank
+    # re-aggregating the pinned sym per broadcast (the r14 pagerank
     # fold, applied to the sparse walk).
-    deg = retain(
-        sym.groupBy(F.col("u").alias("node"))
-        .agg(F.count("*").alias("d"))
-        .cache()
-    )
+    deg = pin(sym.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("d")))
     seeds = deg.orderBy(F.desc("d"), F.asc("node")).limit(_PPR_K).select(
         "node"
     )

@@ -27,7 +27,7 @@ from pyspark.sql.window import Window
 
 from ondemand_dask_spark.functions.vectors import dot as _dot, l2_norm as _norm
 from ondemand_dask_spark.io import load_table
-from ondemand_dask_spark.operators.checkpoint import retain
+from ondemand_dask_spark.operators.checkpoint import pin
 from ondemand_dask_spark.registry import register
 
 _R = 4
@@ -121,7 +121,11 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """b-bit random-hyperplane signature per vector (narrow op)."""
+    """b-bit random-hyperplane signature per vector (narrow op).
+
+    Unstored: callers that read the table more than once `pin` it —
+    the signature fold is interpreted (HOFs don't codegen), so
+    unpinned it would run once per join side."""
     e = load_table(spark, sf_dir, "embeddings")
     # proj(p) = Σ_d emb[d] * w(p, d); bit p = proj > 0
     proj = F.transform(
@@ -142,27 +146,20 @@ def _signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda pr, p: F.when(pr > 0, F.pow(F.lit(2.0), p)).otherwise(F.lit(0.0)),
     )
     sig = F.aggregate(bits, F.lit(0.0), lambda acc, x: acc + x).cast("long")
-    # cached: the signature fold is interpreted (HOFs don't codegen)
-    # and every caller joins this table against itself or probes it —
-    # without the cache the 16×dim fold runs once per join side.
     # Zero-norm vectors are excluded at the signature layer on both
     # engines (embeddings-fuzz finding): every hyperplane projection
     # is 0, so they all pollute one meaningless bucket, and every
     # downstream cosine against them is an undefined 0/0 (ANSI
     # division throws).
-    return retain(
-        e.select(
-            "vec_id",
-            "label",
-            "embedding",
-            sig.alias("signature"),
-            # per-vector norm, computed once here so downstream pair
-            # joins never re-fold it per pair
-            _norm(F.col("embedding")).alias("nrm"),
-        )
-        .filter(F.col("nrm") > 0)
-        .cache()
-    )
+    return e.select(
+        "vec_id",
+        "label",
+        "embedding",
+        sig.alias("signature"),
+        # per-vector norm, computed once here so downstream pair
+        # joins never re-fold it per pair
+        _norm(F.col("embedding")).alias("nrm"),
+    ).filter(F.col("nrm") > 0)
 
 
 _SIG_SQL = f"""
@@ -224,7 +221,7 @@ def ann_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces the n² cross join at scale), then exact cosine re-rank
     within the bucket.  Queries landing in singleton buckets return
     no rows — the recall/multiprobe tradeoff made visible."""
-    sig = _signatures(spark, sf_dir)
+    sig = pin(_signatures(spark, sf_dir))
     q = sig.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
@@ -344,7 +341,7 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
          ).alias("cos"),
     )
     w_assign = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("list_id"))
-    ranked = retain(scored.withColumn("rn", F.row_number().over(w_assign)).cache())
+    ranked = pin(scored.withColumn("rn", F.row_number().over(w_assign)))
     assign = ranked.filter(F.col("rn") == 1).select(
         "vec_id", "embedding", "nrm", "list_id"
     )
@@ -404,7 +401,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     The threshold is low on this synthetic corpus (random vectors
     cluster weakly); production semantic dedup runs ≥ 0.95 on real
     embeddings with the identical plan."""
-    sig = _signatures(spark, sf_dir)
+    sig = pin(_signatures(spark, sf_dir))
     a, b = sig.alias("a"), sig.alias("b")
     cos = _dot(F.col("a.embedding"), F.col("b.embedding")) / (
         F.col("a.nrm") * F.col("b.nrm")
@@ -1284,7 +1281,7 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_recall.py against the same exact-cosine truth), at a
     cost that stays proportional to bucket occupancy, not corpus
     size."""
-    sig = _signatures(spark, sf_dir)
+    sig = pin(_signatures(spark, sf_dir))
     q = sig.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),

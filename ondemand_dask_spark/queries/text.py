@@ -25,7 +25,7 @@ from ondemand_dask_spark.functions.texthash import (
     rolling_fingerprint,
 )
 from ondemand_dask_spark.io import load_table
-from ondemand_dask_spark.operators.checkpoint import retain
+from ondemand_dask_spark.operators.checkpoint import pin
 from ondemand_dask_spark.registry import register
 
 _R = 4
@@ -536,7 +536,7 @@ def text_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("term", "df")
     )
-    w = (
+    w = pin(
         tf.join(kept, "term")
         .crossJoin(F.broadcast(n))
         .select(
@@ -547,9 +547,7 @@ def text_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * F.log(F.col("n_docs").cast("double") / F.col("df"))
             ).alias("w"),
         )
-        .cache()
     )
-    retain(w)
     norms = w.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm")
     )

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ondemand_dask_spark.io import load_table
-from ondemand_dask_spark.operators.checkpoint import retain
+from ondemand_dask_spark.operators.checkpoint import pin
 from ondemand_dask_spark.registry import register
 
 # Floating aggregates are rounded identically on both engines so the
@@ -608,7 +608,7 @@ def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top supplier (Q15 shape): an aggregate reused both as a join
     input and inside a scalar subquery (its max).  The revenue frame
-    is |suppliers| rows — bounded — so it is cached and the max is an
+    is |suppliers| rows — bounded — so it is pinned and the max is an
     empty-partition window over it (one task over a tiny frame), not
     a recompute of the lineitem scan."""
     from pyspark.sql.window import Window
@@ -618,19 +618,17 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp_ntz"))
     )
     s = load_table(spark, sf_dir, "supplier")
-    revenue = retain(
-        li.groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(
+    revenue = pin(
+        li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
             F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
                 "total_revenue"
             )
         )
-        .cache()
     )
     # Broadcast 1-row max, not a global window: the window form moves
     # the whole per-supplier aggregate through one task, while the
     # agg+crossJoin keeps the max a partial-reduced scalar and the
-    # filter a narrow op over the (cached) revenue table.
+    # filter a narrow op over the (pinned) revenue table.
     mx = revenue.agg(F.max("total_revenue").alias("__max_rev"))
     top = revenue.crossJoin(F.broadcast(mx)).filter(
         F.col("total_revenue") == F.col("__max_rev")

@@ -5,16 +5,18 @@ unpersist() on a localCheckpointed frame does NOT free its blocks (if
 Spark ever fixes this, the xfail-style assertion below flags the
 helper as obsolete); (2) the LogicalRDD-level release DOES free them,
 immediately visible in getRDDStorageInfo.  Then the lifecycle built on
-it: `retain` + `evict_all_retained`, called by every registered
-query's entry.
+it: `pin` / `retain` + `evict_all_retained`, called by every
+registered query's entry.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ondemand_dask_spark.operators.checkpoint import (
     evict_all_retained,
+    pin,
     release_local_checkpoint,
     retain,
 )
@@ -53,35 +55,43 @@ def test_release_is_safe_on_non_checkpointed(spark):
     cached.unpersist()
 
 
-def _retain_both(spark) -> set[int]:
-    """Retain one localCheckpoint and one cache; their storage ids."""
+def _retain_two(spark) -> set[int]:
+    """Pin one frame and retain one localCheckpoint; their storage ids."""
     before = _cached_rdd_ids(spark)
+    pin(spark.range(20_000))
     retain(spark.range(20_000).localCheckpoint())
-    retain(spark.range(20_000).cache()).count()
     held = _cached_rdd_ids(spark) - before
     assert len(held) == 2, "retained frames should hold storage blocks"
     return held
 
 
-def test_retained_caches_evicts_checkpointed_and_cached(spark):
-    """evict_all_retained must free BOTH kinds of retained frame:
-    plain caches via unpersist, localCheckpoints via the LogicalRDD
-    release (the round-5 ADVICE fix — graph.py's old evict used bare
-    unpersist, a silent no-op on its checkpointed k-core edges)."""
-    held = _retain_both(spark)
+def test_evict_frees_retained_checkpoints(spark):
+    """evict_all_retained frees every retained frame through the
+    LogicalRDD release (a bare unpersist() would be a silent no-op on
+    each of them)."""
+    held = _retain_two(spark)
     evict_all_retained()
     assert not (held & _cached_rdd_ids(spark)), (
         "evict_all_retained() left retained storage blocks behind"
     )
 
 
+def test_retain_refuses_a_cache(spark):
+    """The lifecycle has one release path, so retain() only takes
+    checkpoints: a `.cache()`d frame raises instead of leaking."""
+    cached = spark.range(10).cache()
+    with pytest.raises(ValueError, match="localCheckpoint"):
+        retain(cached)
+    cached.unpersist()
+
+
 def test_module_caches_use_release_aware_eviction(spark, sf_dir):
     """A registered query's entry is the eviction point: calling any
-    `Query.fn` frees everything retained before it, checkpoints
-    included — no query module keeps a discipline of its own."""
+    `Query.fn` frees everything retained before it — no query module
+    keeps a discipline of its own."""
     from ondemand_dask_spark.registry import all_queries
 
-    held = _retain_both(spark)
+    held = _retain_two(spark)
     all_queries()["tpch_q6"].fn(spark, sf_dir)
     assert not (held & _cached_rdd_ids(spark)), (
         "a registered query's entry left retained storage blocks behind"

@@ -54,16 +54,25 @@ def _write_docs(spark, tmp_path, name, rows):
     return sf_dir
 
 
-def _executed_plan(spark) -> str:
-    return (
-        dedup_ngram_jaccard(spark, SF_DIR)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+def _executed_plan(spark, monkeypatch) -> str:
+    """The query's plan plus the index build's: the kept instances are
+    pinned, so the build is the plan of the frame handed to `pin`, and
+    the returned plan only scans its checkpoint."""
+    from ondemand_dask_spark.operators import checkpoint
+    from ondemand_dask_spark.queries import dedup
+
+    pinned = []
+    monkeypatch.setattr(
+        dedup, "pin", lambda f: checkpoint.pin(pinned.append(f) or f)
+    )
+    df = dedup_ngram_jaccard(spark, SF_DIR)
+    return "\n".join(
+        f._jdf.queryExecution().executedPlan().toString()
+        for f in [df, *pinned]
     )
 
 
-def test_index_build_every_collect_set_is_guarded(spark):
+def test_index_build_every_collect_set_is_guarded(spark, monkeypatch):
     """The bound's load-bearing plan property, kept deliberately
     LOOSE (ADVICE r11 — operator-name regexes break across Spark /
     AQE upgrades even when the build stays bounded): every
@@ -73,7 +82,7 @@ def test_index_build_every_collect_set_is_guarded(spark):
     a partial_collect_set with no matching LeftAnti.  The primary
     pins remain the BEHAVIORAL tests below (hot shingle routed
     suspect and cut; NULL-lang isolation; pair exactness)."""
-    plan = _executed_plan(spark)
+    plan = _executed_plan(spark, monkeypatch)
     n_set = plan.count("partial_collect_set")
     n_anti = plan.count("LeftAnti")
     assert n_set >= 1 and n_anti >= n_set, (n_set, n_anti)
@@ -85,8 +94,8 @@ def test_index_build_every_collect_set_is_guarded(spark):
     "key/function rendering) — re-derive the regexes on upgrade; "
     "the version-independent guard is the lockstep test above",
 )
-def test_index_build_plan_shape_spark41(spark):
-    plan = _executed_plan(spark)
+def test_index_build_plan_shape_spark41(spark, monkeypatch):
+    plan = _executed_plan(spark, monkeypatch)
     # the suspect branch's pair-keyed, keys-only dedup aggregate
     assert re.search(
         r"HashAggregate\(keys=\[h#\d+L, doc_id#\d+L\], functions=\[\]",
@@ -135,7 +144,7 @@ def test_null_lang_docs_never_pair(spark, tmp_path):
     assert pairs == {(3, 4)}, pairs
 
 
-def test_pair_aggregate_exchange_below_aggregation(spark):
+def test_pair_aggregate_exchange_below_aggregation(spark, monkeypatch):
     """r15: the quadratic pair aggregation must run at cluster width.
     The exchange feeding it is an explicit REPARTITION_BY_NUM on
     (doc_a, doc_b) at 2x parallelism — exempt from AQE coalescing, so
@@ -143,7 +152,7 @@ def test_pair_aggregate_exchange_below_aggregation(spark):
     spark.sql.shuffle.partitions tasks (the sf1 profile showed the
     whole 193M-row expansion + aggregation on 8 of 32 cores with
     ~490 MB spilled per side; A/B in _ngram_pair_scores' comment)."""
-    plan = _executed_plan(spark)
+    plan = _executed_plan(spark, monkeypatch)
     n = 2 * spark.sparkContext.defaultParallelism
     assert re.search(
         r"hashpartitioning\(doc_a#\d+L, doc_b#\d+L, %d\), REPARTITION_BY_NUM"

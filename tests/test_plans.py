@@ -134,15 +134,25 @@ def test_asof_nearest_two_passes(spark, sf_dir):
     assert python_eval_count(df) == 0
 
 
-def test_ivf_probes_broadcast(spark, sf_dir):
+def test_ivf_probes_broadcast(spark, sf_dir, monkeypatch):
     """IVF ANN: seeds and probe lists are the small sides — both must
-    broadcast; the corpus assignment costs bounded shuffles."""
-    df = _df("ann_ivf_probe", spark, sf_dir)
-    assert broadcast_join_count(df) >= 2
+    broadcast; the corpus assignment costs bounded shuffles.  The
+    list-assignment ranking is pinned, and a checkpoint's plan is a
+    bare RDD scan, so the ranking's own plan is counted from the frame
+    handed to `pin`."""
+    from ondemand_dask_spark.operators import checkpoint
+    from ondemand_dask_spark.queries import similarity
+
+    pinned = []
+    monkeypatch.setattr(
+        similarity, "pin", lambda f: checkpoint.pin(pinned.append(f) or f)
+    )
+    plans = [_df("ann_ivf_probe", spark, sf_dir), *pinned]
+    assert sum(broadcast_join_count(p) for p in plans) >= 2
     # seed top-k + assignment window + per-query re-rank window: three
     # bounded exchanges, none proportional to corpus × queries.
-    assert shuffle_count(df) <= 3
-    assert python_eval_count(df) == 0
+    assert sum(shuffle_count(p) for p in plans) <= 3
+    assert sum(python_eval_count(p) for p in plans) == 0
 
 
 @pytest.mark.parametrize(
@@ -182,6 +192,41 @@ def test_minhash_lsh_reads_checkpointed_docs(spark, sf_dir):
     df = _df("dedup_minhash_lsh", spark, sf_dir)
     assert shuffle_count(df) == 2
     assert "InMemoryTableScan" not in plan_string(df)
+
+
+@pytest.mark.parametrize(
+    "name", ["graph_pagerank", "graph_bfs_khop", "dedup_duplicate_spans"]
+)
+def test_multi_reader_intermediates_are_pinned(
+    name, spark, sf_dir, monkeypatch
+):
+    """Each of these queries reads an intermediate from several plan
+    branches (pagerank's sym and deg, BFS's edge list, the span query's
+    gram table).  They are pinned — built once, eagerly, before the
+    plan runs — so neither the returned plan nor any frame checkpointed
+    while building it (BFS's per-round distance vectors) scans a lazy
+    cache that concurrent readers would each compute."""
+    from ondemand_dask_spark.plans import plan_string
+
+    checkpointed = []
+    frame_cls = type(spark.range(1))
+    local_checkpoint = frame_cls.localCheckpoint
+
+    def spy(df, *args, **kwargs):
+        checkpointed.append(plan_string(df))
+        return local_checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    plans = [plan_string(_df(name, spark, sf_dir)), *checkpointed]
+    assert not [p for p in plans if "InMemoryTableScan" in p]
+
+
+def test_label_propagation_rounds_are_exchange_free(spark, sf_dir):
+    """LPA groups every round on u over its u-partitioned pinned edge
+    list, so the returned plan holds no exchange at all.  A pin that
+    lost the partitioning (a checkpoint of an adaptive plan reports
+    none) puts two exchanges back into every round."""
+    assert shuffle_count(_df("graph_label_propagation", spark, sf_dir)) == 0
 
 
 def test_minhash_docs_one_exchange_at_cluster_width(spark, sf_dir):

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from ondemand_dask_spark.operators.checkpoint import release_local_checkpoint
@@ -80,30 +81,12 @@ def test_self_loops_dropped(spark):
     assert got == {2: 2, 3: 2}
 
 
-def test_batched_contractions_match_default_and_honor_budget(spark):
-    """The contractions_per_checkpoint knob (r8) batches checkpoints;
-    it must neither change the answer nor multiply the max_rounds
-    contraction budget (review finding: the first cut bounded
-    checkpoint BATCHES, so cpc=4 quietly ran 4x the budget)."""
-    import pytest
-
-    chain = [(i, i + 1) for i in range(40)]
-    df = spark.createDataFrame(chain, ["src", "dst"])
-    want = _union_find_labels(chain)
-    for cpc in (2, 3):
-        stats: dict = {}
-        labels, stars = connected_components_star(
-            df, contractions_per_checkpoint=cpc, stats=stats
-        )
-        got = {int(r["node"]): int(r["cluster_id"]) for r in labels.collect()}
-        assert release_local_checkpoint(stars)
-        assert got == want, cpc
-        # rounds counts executed contractions (may include up to
-        # cpc-1 past-fixpoint no-ops) and never exceeds the budget
-        assert stats["rounds"] % cpc == 0 and stats["rounds"] <= 32
-    # budget is CONTRACTIONS, not batches: a 40-chain needs ~log2
-    # rounds, so max_rounds=2 must raise even with a big batch size
+def test_round_budget_raises_before_the_fixpoint(spark):
+    """max_rounds bounds contractions: a 40-node chain needs ~log2(40)
+    of them, so a budget of 2 must raise rather than return a non-star
+    (wrong) labeling."""
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], ["src", "dst"]
+    )
     with pytest.raises(RuntimeError, match="within 2 contractions"):
-        connected_components_star(
-            df, max_rounds=2, contractions_per_checkpoint=8
-        )
+        connected_components_star(df, max_rounds=2)

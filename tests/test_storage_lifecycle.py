@@ -1,5 +1,5 @@
-"""One storage lifecycle: every cache and checkpoint a registered query
-leaves behind is released by `evict_all_retained`, which the registry
+"""One storage lifecycle: every checkpoint a registered query leaves
+behind is released by `evict_all_retained`, which the registry
 calls at every query entry — so a long session holds at most one
 query's storage blocks.
 
@@ -22,12 +22,12 @@ from tests.compare import assert_results_match
 # One registered query per storage site under queries/ (the operator
 # sites in operators/quantile.py and operators/rank.py ride along).
 SWEEP = [
-    "tpch_q15",  # per-supplier revenue cache
+    "tpch_q15",  # per-supplier revenue checkpoint
     "pipeline_leakage_free_split",  # pair-list + star checkpoints
-    "ann_lsh_probe",  # signature-table cache
-    "ann_ivf_probe",  # list-assignment ranking cache
-    "text_tfidf_cosine_pairs",  # term-weight cache
-    "agg_groupby_quantile",  # quantile probe's counts cache
+    "ann_lsh_probe",  # signature-table checkpoint
+    "ann_ivf_probe",  # list-assignment ranking checkpoint
+    "text_tfidf_cosine_pairs",  # term-weight checkpoint
+    "agg_groupby_quantile",  # quantile probe's counts checkpoint
     "stat_spearman_corr",  # global_min_ranks checkpoints
     "sort_global_rank_scalable",  # global_row_numbers checkpoint
     "events_rfm_segmentation",  # three chained rank checkpoints
@@ -36,18 +36,18 @@ SWEEP = [
     "sql_recursive_sessionize",  # edge-frame checkpoint
     "dedup_minhash_lsh",  # per-document MinHash checkpoint
     "dedup_minhash_estimate_certificate",  # its own per-document checkpoint
-    "dedup_ngram_jaccard",  # kept-shingle-instance cache
-    "dedup_duplicate_spans",  # gram cache
+    "dedup_ngram_jaccard",  # kept-shingle-instance checkpoint
+    "dedup_duplicate_spans",  # gram checkpoint
     "dedup_connected_components",  # final-round label checkpoint
     "dedup_cc_star_contraction",  # converged-star checkpoint
-    "graph_triangle_count",  # edge cache, rank checkpoint, oriented cache
-    "graph_triangle_count_estimate",  # sampled oriented cache
-    "graph_pagerank",  # symmetric-edge + degree caches
-    "graph_personalized_pagerank",  # its own edge + degree caches
-    "graph_label_propagation",  # partitioned symmetric-edge cache
+    "graph_triangle_count",  # edge, rank and oriented checkpoints
+    "graph_triangle_count_estimate",  # sampled oriented checkpoint
+    "graph_pagerank",  # symmetric-edge + degree checkpoints
+    "graph_personalized_pagerank",  # its own edge + degree checkpoints
+    "graph_label_propagation",  # partitioned symmetric-edge checkpoint
     "graph_kcore",  # surviving-edge checkpoint
-    "graph_bfs_khop",  # per-round frontier checkpoints
-    "basket_association_rules",  # basket-line cache
+    "graph_bfs_khop",  # edge + per-round frontier checkpoints
+    "basket_association_rules",  # basket-line checkpoint
 ]
 
 
