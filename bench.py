@@ -214,7 +214,7 @@ R3_COMPARABLE = R2_COMPARABLE + [
     "text_quality_score", "agg_rollup",
 ]
 
-# The isolated protocol (tools/ab_isolated.py: fresh session, both
+# The isolated protocol (tools/ab.py --fresh: fresh session, both
 # calibrations, 1 warm-up + 5 timed runs, full eviction between runs)
 # is applied EVERY round to the most expensive headline queries and
 # committed in the artifact's `isolated` block (r8 verdict item 3):
@@ -518,7 +518,7 @@ def main() -> None:
     # on a WINDOW query as bandwidth drift unless its own plan
     # changed.
     #
-    # r8 bisect of the two r7 guard flags (tools/ab_isolated.py,
+    # r8 bisect of the two r7 guard flags (the isolated protocol,
     # exclusive host, fresh session, 1 warm-up + 5 timed, CPU calib
     # 0.265 s ≈ the r6-era 0.254 s, i.e. +4% CPU):
     #   agg_groupby_quantile  isolated best 1.57 s vs r6 1.47 s (+7%)
@@ -563,7 +563,7 @@ def main() -> None:
     #
     # r12 attribution of the SEVEN r11 driver-run flags + the
     # triangle in-bench step (r11 verdict item 5; quiet host,
-    # tools/ab_isolated.py, cpu calib 0.229–0.254 vs r10's 0.343):
+    # the isolated protocol, cpu calib 0.229–0.254 vs r10's 0.343):
     #   graph_triangle_count   iso best 5.759 vs r10 iso 5.757 — EXACT
     #     parity; the r11 driver's 9.51 in-bench / 6.02 iso was
     #     session pressure.
@@ -682,7 +682,7 @@ def main() -> None:
     iso_names = [n for n in ISOLATED if n in queries]
     if iso_names:
         sys.path.insert(0, os.path.join(SCRIPT_DIR, "tools"))
-        from ab_isolated import measure as isolated_measure
+        from ab import measure as isolated_measure
 
         iso_spark = build_session(
             app_name="bench_isolated",

@@ -73,7 +73,7 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned at cluster width — and at 100 TB it is also the
     only viable shape, since neither side of a fact-fact self-join
     broadcasts.  Measured at sf0.1: 2.8 s → 1.4 s warm.  r5 A/B
-    (tools/ab_edges.py, one warm session, best-of-3) also rejected
+    (commit a444ab0, one warm session, best-of-3) also rejected
     the groupBy-collect_set + codegen pair-expansion alternative:
     1.41 s self-join vs 2.92 s collect — the wide per-order arrays
     cost more than the co-partitioned probe saves."""
@@ -107,8 +107,8 @@ def _sym(edges: DataFrame) -> DataFrame:
     materialized separately), while the explode form is a narrow op
     over one pass of the build.  Same row multiset — (src,dst) pairs
     are distinct and src<dst, so the two emitted directions cannot
-    collide.  r14 A/B (tools/ab_pagerank_r14.py, one warm session,
-    interleaved best-of-3 at sf0.1): pagerank 6.01 s union-sym vs
+    collide.  r14 A/B (OPTIMIZATION_r14.md "graph: `_sym`
+    symmetrization", one warm session, interleaved best-of-3 at sf0.1): pagerank 6.01 s union-sym vs
     5.08 s explode-sym with iterations unchanged."""
     return edges.select(
         F.explode(
@@ -526,16 +526,15 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank vector and kept deg as a separate broadcast attach — a wash
     (6.34 s declarative vs 6.77 s explicit), because the plan still
     carried the per-iteration Exchange+Sort of sym under a
-    SortMergeJoin (plans/r14/graph_pagerank_before.txt shows 3 SMJs
-    over the 2.4M-row cache).  Folding deg INTO the broadcast vector
-    removes both the SMJ and the second attach: r14 A/B
-    (tools/ab_pagerank_r14.py, one warm session, interleaved
-    best-of-3 at sf0.1, identity-checked vs the oracle shape at
-    sf0.01): 6.01 s registered vs 4.24 s broadcast-vector (−29%),
-    plan 26 → 12 Exchanges / 3 → 0 SortMergeJoins
-    (plans/r14/graph_pagerank_{before,after}.txt).  LPA's r8
+    SortMergeJoin (3 SMJs over the 2.4M-row cache).  Folding deg
+    INTO the broadcast vector removes both the SMJ and the second
+    attach: r14 A/B (OPTIMIZATION_r14.md "graph_pagerank — broadcast
+    (node, pr, d) vector per superstep", one warm session,
+    interleaved best-of-3 at sf0.1, identity-checked vs the oracle
+    shape at sf0.01): 6.01 s registered vs 4.24 s broadcast-vector
+    (−29%), plan 26 → 12 Exchanges / 3 → 0 SortMergeJoins.  LPA's r8
     zero-exchange-round rewrite (pre-partitioned pinned sym) still
-    LOSES here — 4.88 s vs 5.84 s (tools/ab_lpa_partitioned.py) —
+    LOSES here — 4.88 s vs 5.84 s (commit 5f8eff8) —
     because one saved groupBy exchange per iteration does not repay
     caching 2|E| pre-partitioned rows up front.  At billion-node |V|
     where the rank vector outgrows a broadcast, the keyed-join form
@@ -648,8 +647,11 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Association-rule mining (support / confidence / lift) over
     order baskets — the classic market-basket analysis, which is
     also the 2-itemset iteration of Apriori.  Same bounded per-order
-    pair fan-out as the co-purchase edge build (co-partitioned
-    fact-fact self-join, never a cross join); pair supports are one
+    pair fan-out as the co-purchase edge build (an equi-self-join on
+    l_orderkey of the pinned distinct (order, part) table, never a
+    cross join; a pin reports no output partitioning, so a
+    repartition inside it would not co-partition the join: 2.65 s
+    with and without one, 10-pair A/B at sf0.1); pair supports are one
     partial+final agg over the emitted pairs, item supports and the
     basket count are aggregate-derived small frames that broadcast
     onto the rule table.  The min-support HAVING prunes BEFORE the
@@ -659,7 +661,6 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
-        .repartition(spark.sparkContext.defaultParallelism, "l_orderkey")
     )
     a, b = li.alias("a"), li.alias("b")
     pair_sup = (
@@ -1087,7 +1088,7 @@ def graph_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     by dedup_connected_components.
 
     The LPA zero-exchange rewrite was A/B'd here too and is a WASH
-    (tools/ab_bfs_partitioned.py, one warm session, interleaved
+    (commit a046c95, one warm session, interleaved
     best-of-4 at sf0.1: 5.70 s vs 5.48 s with sym repartitioned on
     v and stored): BFS's per-superstep cost is the stored
     2|E| scan, not the reduced-side exchanges."""
@@ -1189,7 +1190,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     The alias must be a separate Project: an alias INSIDE
     groupBy(col("u").alias("node")) defeats
     AliasAwareOutputPartitioning and silently reinstates 2 data-
-    sized exchanges per round.  r8 A/B (tools/ab_lpa_partitioned.py,
+    sized exchanges per round.  r8 A/B (commit 5f8eff8,
     one warm session, interleaved best-of-3 at sf0.1):
     10.17 s registered vs 5.28 s partitioned, −48%.  The same
     rewrite LOSES on graph_pagerank (4.88 → 5.84 s): its rank join

@@ -1,7 +1,7 @@
 """Pins for bench.py's drift-normalized regression guard — the
 piece that decides whether a round-over-round slowdown is flagged.
 Two rounds of false flags (r7: 2, r8 preview: 6, every one bisected
-to host drift via tools/ab_isolated.py) bought leniency; the r10
+to host drift via the isolated protocol) bought leniency; the r10
 review then showed the most-lenient-of-four form OVER-promising
 (r10-start cpu ÷ r9-END cpu printed drift ×2.80, wide enough to
 absorb a genuine ≤2.8× regression).  The settled rules:
@@ -158,7 +158,7 @@ def test_isolated_protocol_names_are_registered_headline_queries():
     """bench.py commits an `isolated` block (fresh-session best-of-5
     with own calibrations) for the most expensive headline queries each round
     — the names must stay registered and benched, and the shared
-    measure() instrument must be the one tools/ab_isolated.py ships."""
+    measure() instrument must be the one tools/ab.py ships."""
     import os
     import sys
 
@@ -176,7 +176,7 @@ def test_isolated_protocol_names_are_registered_headline_queries():
     sys.path.insert(
         0, os.path.join(os.path.dirname(bench.__file__), "tools")
     )
-    from ab_isolated import measure
+    from ab import measure
 
     assert callable(measure)
 

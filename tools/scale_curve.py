@@ -58,9 +58,9 @@ SUPERLINEAR_FLAG = 1.3  # α above this ⇒ flagged in the table
 def measure_sf(sf_dir: str, names: list[str], runs: int) -> dict:
     """Fresh session for ONE scale point: calibration + per-query
     warm-up + best-of-`runs` with eviction between runs (the
-    ab_isolated discipline, one session per SF so JVM warm-up never
-    biases the small SFs that run first)."""
-    from tools.ab_isolated import measure
+    isolated protocol of tools/ab.py, one session per SF so JVM
+    warm-up never biases the small SFs that run first)."""
+    from tools.ab import measure
 
     spark = build_session(app_name=f"scale_curve_{os.path.basename(sf_dir)}")
     spark.sparkContext.setLogLevel("ERROR")
@@ -95,9 +95,9 @@ def bench_table(pairs: str) -> str:
         with open(f) as fh:
             qmap = json.load(fh)["queries"]
         # accept both the bench artifact shape ({name: sec}) and the
-        # ab_isolated/isolated-block shape ({name: {"best": sec,
-        # "all": [...]}}) — the sf0.3 graph point is a committed
-        # ab_isolated artifact, not a full bench run
+        # `tools/ab.py --fresh`/isolated-block shape ({name: {"best":
+        # sec, "all": [...]}}) — the sf0.3 graph point is a committed
+        # isolated-protocol artifact, not a full bench run
         qmap = {
             n: (v["best"] if isinstance(v, dict) else v)
             for n, v in qmap.items()
