@@ -1,5 +1,6 @@
-"""Connected components: large-star/small-star contraction and
-min-label propagation.
+"""Connected components (large-star/small-star contraction and
+min-label propagation) and `fixpoint`, the checkpointed iteration
+they and the k-core peel share.
 
 `connected_components_star` is the reusable operator behind
 `dedup_cc_star_contraction` (see that query's docstring for the
@@ -10,26 +11,62 @@ arbitrary edge sets — not just the minhash pair graph — can use them,
 and so property tests can drive them over adversarial topologies
 (chains, where min-label propagation needs O(n) rounds).
 
-Round structure: each large-star and small-star step is one
-groupBy(min) plus one equi-join — two exchanges — and every round's
-result is `localCheckpoint`ed so the plan stays constant-size, with
-superseded round blocks released eagerly through
-`release_local_checkpoint` (a plain `unpersist()` is a no-op on
-checkpoint blocks — see operators/checkpoint.py).  Convergence is
-detected from a two-scalar (count, hash-sum) edge-set checksum; the
-driver never sees data rows; exhausting `max_rounds` without
-reaching the fixpoint RAISES rather than returning a silently
-non-star (wrong) labeling.  Min-label propagation keeps the same
-discipline: one checkpoint per round, a scalar changed-count probe,
-and a raise when its round budget runs out before the fixpoint.
+Round structure: `fixpoint` `localCheckpoint`s every round's result
+so the plan stays constant-size, probes it for one scalar (the driver
+never sees data rows), and releases the superseded round's blocks
+eagerly through `release_local_checkpoint` (a plain `unpersist()` is
+a no-op on checkpoint blocks — see operators/checkpoint.py).  The
+final round is `retain`ed, so the lazy result each operator returns
+stays readable until the next query entry.  Exhausting the round
+budget releases the last round and RAISES rather than returning a
+silently unconverged (wrong) answer.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ondemand_dask_spark.operators.checkpoint import release_local_checkpoint
+from ondemand_dask_spark.operators.checkpoint import (
+    release_local_checkpoint,
+    retain,
+)
+
+
+def fixpoint(
+    df: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    probe: Callable[[DataFrame], object],
+    max_rounds: int,
+    what: str,
+) -> DataFrame:
+    """Iterate `step` from `df` until `probe` repeats; the final round.
+
+    `df` is checkpointed and probed first; each round then checkpoints
+    `step(cur)`, probes it and releases the superseded round.  A
+    repeated probe value must mean `step` changed nothing (an edge
+    checksum, or a count or sum that only moves one way while the
+    frame changes).  The returned frame is `retain`ed
+    until the next query entry.  When `max_rounds` rounds pass without
+    a repeat, the last round is released and RuntimeError names `what`
+    and the budget."""
+    cur = df.localCheckpoint()
+    prev = probe(cur)
+    for _ in range(max_rounds):
+        nxt = step(cur).localCheckpoint()
+        val = probe(nxt)
+        release_local_checkpoint(cur)
+        cur = nxt
+        if val == prev:
+            return retain(cur)
+        prev = val
+    release_local_checkpoint(cur)
+    raise RuntimeError(
+        f"{what} did not converge within {max_rounds} rounds; raise its "
+        "round budget"
+    )
 
 
 def _checksum(e: DataFrame) -> tuple:
@@ -77,61 +114,53 @@ def connected_components_star(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 32,
-    stats: dict | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Labels for the graph `edges[(src, dst)]` by star contraction.
+) -> DataFrame:
+    """Labels (node, cluster_id) for the graph `edges[(src, dst)]` by
+    star contraction, over every node incident to a non-loop edge;
+    cluster_id = component minimum.
 
-    Returns (labels, star_edges): labels is (node, cluster_id) over
-    every node incident to a non-loop edge, cluster_id = component
-    minimum; star_edges is the converged (a → component-min) edge set
-    whose checkpoint blocks labels' plan reads — the CALLER owns its
-    lifetime (release via release_local_checkpoint after the labels
-    materialize; plain unpersist() is a no-op on checkpoint blocks).  At the
-    fixpoint every non-min node appears exactly once on the `a` side
-    and every component min on the `b` side, so labels read straight
-    off the stars with no join.  Self-loops are dropped; a node with
-    ONLY self-loop edges does not appear (matches the pair-graph
-    semantics where pairs are strict a < b)."""
+    Each round is one large-star + small-star contraction, and the
+    fixpoint shows as an unchanged two-scalar (count, hash-sum) edge
+    checksum.  `max_rounds` budgets contractions (rounds needed grow
+    ~log2(n)); exhausting it RAISES rather than returning a non-star
+    (wrong) labeling.  At the fixpoint every non-min node appears
+    exactly once on the `a` side and every component min on the `b`
+    side, so labels read straight off the converged stars, whose
+    checkpoint is retained until the next query entry.  Self-loops
+    are dropped; a node with ONLY self-loop edges does not appear
+    (matches the pair-graph semantics where pairs are strict a < b).
+
+    One contraction per checkpoint + checksum is the finest
+    convergence granularity.  Batching several contractions per
+    checkpoint was A/B'd on dedup_connected_components at sf0.1 (r8,
+    one warm session: 1, 2, 3 per checkpoint → 2.36, 2.36, 2.57 s
+    best-of-4) and is a wash — the pair-graph build, not per-round job
+    overhead, dominates."""
     e0 = edges.select(
         F.greatest(F.col(src), F.col(dst)).alias("a"),
         F.least(F.col(src), F.col(dst)).alias("b"),
     ).where(F.col(src) != F.col(dst))
-    cur_edges = e0.distinct().localCheckpoint()
-    prev = _checksum(cur_edges)
-    rounds = 0
-    converged = False
-    while rounds < max_rounds:
-        # one contraction per checkpoint + checksum: the finest
-        # convergence granularity.  Batching several contractions per
-        # checkpoint was A/B'd on dedup_connected_components at sf0.1
-        # (r8, one warm session: 1, 2, 3 per checkpoint → 2.36, 2.36,
-        # 2.57 s best-of-4) and is a wash — the pair-graph build, not
-        # per-round job overhead, dominates.
-        new_edges = _small_star(_large_star(cur_edges)).localCheckpoint()
-        cur = _checksum(new_edges)
-        release_local_checkpoint(cur_edges)
-        cur_edges = new_edges
-        rounds += 1
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if stats is not None:
-        stats["rounds"] = rounds
-    if not converged:
-        raise RuntimeError(
-            f"star contraction did not converge within {max_rounds} "
-            "contractions (rounds needed grow ~log2(n); raise "
-            "max_rounds)"
-        )
-    labels = cur_edges.select(
+    stars = fixpoint(
+        e0.distinct(),
+        lambda e: _small_star(_large_star(e)),
+        _checksum,
+        max_rounds,
+        "star contraction",
+    )
+    return stars.select(
         F.col("a").alias("node"), F.col("b").alias("cluster_id")
     ).unionByName(
-        cur_edges.select(
+        stars.select(
             F.col("b").alias("node"), F.col("b").alias("cluster_id")
         ).distinct()
     )
-    return labels, cur_edges
+
+
+def _label_sum(labels: DataFrame):
+    # exact: 38 digits hold any sum of 64-bit labels
+    return labels.agg(
+        F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
+    ).first()["s"]
 
 
 def connected_components_minlabel(
@@ -139,17 +168,13 @@ def connected_components_minlabel(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 10,
-    stats: dict | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Labels for the graph `edges[(src, dst)]` by min-label
-    propagation: each round every node takes the minimum label among
-    itself and its neighbours, until no label drops.
-
-    Returns (labels, handle): labels is (node, cluster_id) over every
-    node incident to an edge, cluster_id = component minimum; handle
-    is the final round's checkpoint, whose blocks labels' plan reads —
-    the CALLER owns its lifetime (release via
-    release_local_checkpoint once the labels materialize).
+) -> DataFrame:
+    """Labels (node, cluster_id) for the graph `edges[(src, dst)]` by
+    min-label propagation, over every node incident to an edge;
+    cluster_id = component minimum.  Each round every node takes the
+    minimum label among itself and its neighbours, until no label
+    drops; the final round's checkpoint is retained until the next
+    query entry.
 
     `max_rounds` budgets label-update rounds, round 1 included; a
     fixpoint shows as a round that changes no label, so a component
@@ -158,8 +183,9 @@ def connected_components_minlabel(
 
     Round 1 is folded into the edge build: every label starts as the
     node itself, so it is least(node, min neighbour) straight off the
-    symmetric edges, and it always changes a label when an edge joins
-    two distinct nodes — no identity-label frame and no probe."""
+    symmetric edges — no identity-label frame.  Labels only fall, so
+    their exact sum repeats exactly when a round changed no label:
+    that sum is the convergence probe."""
     both_ways = F.array(
         F.struct(F.col(src).alias("src"), F.col(dst).alias("dst")),
         F.struct(F.col(dst).alias("src"), F.col(src).alias("dst")),
@@ -169,50 +195,32 @@ def connected_components_minlabel(
         .select("e.src", "e.dst")
         .localCheckpoint()
     )
-    ckpt = (
+    round1 = (
         sym.groupBy("src")
         .agg(F.least(F.col("src"), F.min("dst")).alias("lbl"))
         .select(F.col("src").alias("node"), "lbl")
-        .localCheckpoint()
     )
-    rounds = 1
-    converged = False
-    while rounds < max_rounds:
-        labels = ckpt.select("node", "lbl")
-        # The probe CARRIES the previous label through the min-aggregate
-        # (own rows tag it, neighbour rows contribute NULL, max()
-        # recovers it — each node owns exactly one row), so `changed`
-        # filters the fresh checkpoint instead of joining it back
-        # against the previous round.
+
+    def step(labels: DataFrame) -> DataFrame:
         prop = sym.join(labels, sym["src"] == F.col("node")).select(
             F.col("dst").alias("node"), F.col("lbl").alias("cand")
         )
-        own = labels.select(
-            "node", F.col("lbl").alias("cand"), F.col("lbl").alias("old")
-        )
-        new_ckpt = (
-            own.unionByName(prop.withColumn("old", F.lit(None).cast("long")))
+        return (
+            labels.select("node", F.col("lbl").alias("cand"))
+            .unionByName(prop)
             .groupBy("node")
-            .agg(F.min("cand").alias("lbl"), F.max("old").alias("old"))
-            .localCheckpoint()
+            .agg(F.min("cand").alias("lbl"))
         )
-        changed = new_ckpt.filter(F.col("lbl") < F.col("old")).count()
-        rounds += 1
-        # each localCheckpoint is eager: the superseded round's blocks
-        # are released as soon as the new round's exist
-        release_local_checkpoint(ckpt)
-        ckpt = new_ckpt
-        if changed == 0:
-            converged = True
-            break
-    release_local_checkpoint(sym)
-    if stats is not None:
-        stats["rounds"] = rounds
-    if not converged:
-        release_local_checkpoint(ckpt)
-        raise RuntimeError(
-            f"min-label propagation did not converge within {max_rounds} "
-            "rounds (rounds needed = component diameter + 1; raise "
-            "max_rounds or use connected_components_star)"
+
+    try:
+        labels = fixpoint(
+            round1,
+            step,
+            _label_sum,
+            max_rounds - 1,
+            f"min-label propagation after its folded round 1 "
+            f"(max_rounds={max_rounds})",
         )
-    return ckpt.select("node", F.col("lbl").alias("cluster_id")), ckpt
+    finally:
+        release_local_checkpoint(sym)
+    return labels.select("node", F.col("lbl").alias("cluster_id"))

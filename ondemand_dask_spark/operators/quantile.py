@@ -201,7 +201,6 @@ def exact_group_quantiles_auto(
     col: str,
     qs: dict[str, float],
     threshold: int = MAX_ROWS_PER_SORT_TASK,
-    path: str | None = None,
 ) -> DataFrame:
     """Exact grouped quantiles with runtime path selection.
 
@@ -213,20 +212,9 @@ def exact_group_quantiles_auto(
     distributed rank restores parallelism a 3-group window sort
     can't have.
 
-    path: optional caller hint ('sort' | 'ranged') that SKIPS the
-    probe job entirely — for callers that already know the
-    group-size regime (e.g. a fixed low-cardinality key over a table
-    whose scale band is known).  The probe is one scalar-only
-    blocking action; cheap absolutely, but a measurable fraction of
-    small queries.
-
     The probe's counts checkpoint outlives this call (the returned lazy
     DataFrame reuses it), so it is registered with `checkpoint.retain`
     and released at the next query entry."""
-    if path == "ranged":
-        return exact_group_quantiles_ranged(df, keys, col, qs)
-    if path is not None:
-        return exact_group_quantiles(df, keys, col, qs)
     d = df.select(*keys, F.col(col).cast("double").alias("__v")).filter(
         F.col("__v").isNotNull()
     )

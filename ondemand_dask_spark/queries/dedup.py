@@ -39,7 +39,7 @@ from ondemand_dask_spark.functions.texthash import (
     shingles as _shingle_array,
 )
 from ondemand_dask_spark.io import load_table
-from ondemand_dask_spark.operators.checkpoint import pin, retain
+from ondemand_dask_spark.operators.checkpoint import pin
 from ondemand_dask_spark.operators.graphcc import (
     connected_components_minlabel,
     connected_components_star,
@@ -792,12 +792,15 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical survivor.
 
     Each round is one join + one partial-agg groupBy, both JVM-side;
-    the driver sees only a scalar changed-count per round (the
-    standard convergence action for iterative algorithms — no data is
-    ever collected).  Labels are `localCheckpoint`ed per round: a
-    cache alone keeps the LOGICAL lineage growing — analysis + AQE
-    re-planning then compound per round (measured: round costs grew
-    0.8s → 20s by round 3 under persist-only) — while checkpointing
+    the driver sees only one scalar per round, the exact label sum,
+    which repeats exactly when no label dropped (the standard
+    convergence action for iterative algorithms — no data is ever
+    collected).  The loop is `operators.graphcc.fixpoint`, which
+    retains the final round until the next query entry.  Labels are
+    `localCheckpoint`ed per round: a cache alone keeps the LOGICAL
+    lineage growing — analysis + AQE re-planning then compound per
+    round (measured: round costs grew 0.8s → 20s by round 3 under
+    persist-only) — while checkpointing
     truncates the plan so every round re-optimizes a constant-size
     tree (measured: flat ~0.5s/round).  On a production cluster use
     `checkpoint()` against a reliable dir instead — same truncation,
@@ -818,12 +821,9 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB oracle computes the same fixpoint as a recursive CTE —
     exact differential proof that an ITERATIVE DataFrame algorithm
     terminates at the right answer."""
-    labels, ckpt = connected_components_minlabel(
+    labels = connected_components_minlabel(
         dedup_minhash_lsh(spark, sf_dir), "doc_a", "doc_b"
     )
-    # labels' plan reads the final round's checkpoint blocks, so they
-    # must outlive this call — retained until the next query entry.
-    retain(ckpt)
     return labels.select(F.col("node").alias("doc_id"), "cluster_id")
 
 
@@ -875,18 +875,16 @@ def dedup_cc_star_contraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation superstep.  Convergence is detected from a two-scalar
     edge-set checksum (count + hash sum — the only values the driver
     ever sees); per-round `localCheckpoint` truncates lineage exactly
-    as in the propagation variant, and superseded round blocks are
-    released eagerly.  At the fixpoint the edge set IS the answer:
-    a star (v → component-min) per component."""
+    as in the propagation variant, superseded round blocks are
+    released eagerly, and the converged stars are retained until the
+    next query entry — the same `operators.graphcc.fixpoint` loop.
+    At the fixpoint the edge set IS the answer: a star
+    (v → component-min) per component."""
     # the operator reads the pair list once (its first checkpoint), so
     # the pairs need no cache of their own
-    labels, star_edges = connected_components_star(
+    labels = connected_components_star(
         dedup_minhash_lsh(spark, sf_dir), "doc_a", "doc_b"
     )
-    # labels' plan reads the converged stars' checkpoint blocks, so
-    # they must outlive this call — retained until the next query
-    # entry.
-    retain(star_edges)
     return labels.select(F.col("node").alias("doc_id"), "cluster_id")
 
 

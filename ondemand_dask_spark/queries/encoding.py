@@ -280,9 +280,10 @@ def encode_robust_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     alternative to z-scoring (StandardScaler's mean/std both move
     arbitrarily far under one corrupt value; median and IQR are
     50%-breakdown estimators).  The three quartiles come from the
-    distributed EXACT quantile operator in one pass (shared sort,
-    |groups|·3 boundary rows), come back |groups| rows wide, and
-    broadcast onto the fact scan — identical shape to the other
+    distributed EXACT quantile operator in one pass (its probe picks
+    the window sort, or the ranged path past the ~1M-rows-per-group
+    knee, as in agg_groupby_quantile), come back |groups| rows wide,
+    and broadcast onto the fact scan — identical shape to the other
     scalers: stats aggregate + broadcast transform, no second wide
     shuffle, no per-task value collection."""
     from ondemand_dask_spark.operators.quantile import exact_group_quantiles_auto
@@ -291,7 +292,6 @@ def encode_robust_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     cuts = exact_group_quantiles_auto(
         li, ["l_returnflag"], "l_extendedprice",
         {"q1": 0.25, "med": 0.50, "q3": 0.75},
-        path="sort",  # 3-value key, same prior as agg_groupby_quantile
     )
     return li.join(F.broadcast(cuts), "l_returnflag").select(
         "l_orderkey", "l_linenumber",

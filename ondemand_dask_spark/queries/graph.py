@@ -48,6 +48,7 @@ from pyspark.sql.window import Window
 
 from ondemand_dask_spark.io import load_table
 from ondemand_dask_spark.operators.checkpoint import pin, retain
+from ondemand_dask_spark.operators.graphcc import fixpoint
 from ondemand_dask_spark.registry import register
 
 _R = 4
@@ -816,19 +817,13 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _KCORE_K = 3
-# Oracle unroll depth AND the Spark loop's safety cap.  The Spark side
-# converges on a scalar edge-count fixpoint (usually 2-4 rounds here);
-# peeling is monotone, so once the count is stable every further round
-# is a no-op and the 8-round oracle computes the identical edge set.
-# tests/test_graph_convergence.py proves the fixpoint is reached
-# within this cap at every SF, so the differential check stays exact.
+# Oracle unroll depth AND the Spark loop's round budget.  The Spark
+# side converges on a scalar edge-count fixpoint (usually 2-4 rounds
+# here); peeling is monotone, so once the count is stable every
+# further round is a no-op and the 8-round oracle computes the
+# identical edge set.  A peel that needs more rounds raises, so the
+# differential check never compares a non-core.
 _KCORE_ROUNDS = 8
-
-# Observability for the convergence test: rounds the last graph_kcore
-# call actually executed, and whether the edge count stabilised
-# (reached its fixpoint) before the safety cap.
-LAST_KCORE_ROUNDS: int = 0
-LAST_KCORE_CONVERGED: bool = False
 
 
 def _kcore_oracle() -> str:
@@ -866,27 +861,17 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving dense backbone is the standard noise filter before
     community detection and the 'is this account embedded or
     peripheral' signal in abuse detection.  Both engines run the
-    peel to a TRUE FIXPOINT: the Spark loop runs one degree aggregate
-    + one semi-join pair per round and stops when the scalar edge
-    count stabilises (the same convergence probe as the CC queries —
-    one Long per round crosses the driver, never rows).  The oracle
-    unrolls 8 CTE rounds, which is past the fixpoint at every fixture
-    SF (proven by tests/test_graph_convergence.py); peeling is
-    monotone, so post-fixpoint oracle rounds are identity and the
-    differential check compares the same genuine k-core.  Each
-    round's checkpoint is the convergence counter's free ride — the
-    count() reads cached blocks — and superseded checkpoints release
-    eagerly via the LogicalRDD-level helper."""
-    from ondemand_dask_spark.operators.checkpoint import (
-        release_local_checkpoint,
-    )
+    peel to a TRUE FIXPOINT: the Spark loop (`operators.graphcc.
+    fixpoint`) runs one degree aggregate + one semi-join pair per
+    round and stops when the scalar edge count stabilises (one Long
+    per round crosses the driver, never rows); the count reads the
+    round's checkpoint, and superseded rounds release eagerly.  The
+    oracle unrolls 8 CTE rounds and the Spark loop RAISES past 8, so
+    every result is a fixpoint; peeling is monotone, so
+    post-fixpoint oracle rounds are identity and the differential
+    check compares the same genuine k-core."""
 
-    global LAST_KCORE_ROUNDS, LAST_KCORE_CONVERGED
-    edges = _edges(spark, sf_dir).localCheckpoint()
-    n_edges = edges.count()
-    LAST_KCORE_ROUNDS = 0
-    LAST_KCORE_CONVERGED = False
-    for _ in range(_KCORE_ROUNDS):
+    def peel(edges: DataFrame) -> DataFrame:
         sym_nodes = edges.select(F.col("src").alias("node")).unionByName(
             edges.select(F.col("dst").alias("node"))
         )
@@ -896,23 +881,21 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("d") >= _KCORE_K)
             .select("node")
         )
-        new_edges = (
+        return (
             edges.join(
                 keep.select(F.col("node").alias("src")), "src", "left_semi"
             )
             .join(keep.select(F.col("node").alias("dst")), "dst", "left_semi")
             .select("src", "dst")
-            .localCheckpoint()
         )
-        n_new = new_edges.count()
-        release_local_checkpoint(edges)
-        edges = new_edges
-        LAST_KCORE_ROUNDS += 1
-        if n_new == n_edges:  # no edge lost a qualifying endpoint —
-            LAST_KCORE_CONVERGED = True
-            break  # the remaining graph IS the k-core
-        n_edges = n_new
-    retain(edges)
+
+    edges = fixpoint(
+        _edges(spark, sf_dir),
+        peel,
+        lambda e: e.count(),
+        _KCORE_ROUNDS,
+        f"k-core peel (k={_KCORE_K})",
+    )
     nodes = edges.select(F.col("src").alias("node")).unionByName(
         edges.select(F.col("dst").alias("node"))
     )

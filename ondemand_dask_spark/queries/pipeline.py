@@ -32,7 +32,7 @@ from pyspark.sql.window import Window
 from ondemand_dask_spark.functions.texthash import portable_hash64
 from ondemand_dask_spark.queries.dedup import _MINHASH_PAIRS_SQL
 from ondemand_dask_spark.io import load_table
-from ondemand_dask_spark.operators.checkpoint import pin, retain
+from ondemand_dask_spark.operators.checkpoint import pin
 from ondemand_dask_spark.registry import register
 
 _R = 4
@@ -1267,14 +1267,11 @@ def pipeline_leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and feeds BOTH the cluster labeling — the O(log n)
     # star-contraction operator directly, not the registered CC query,
     # which would re-run the whole pipeline for its own pair build —
-    # and the crossing-pairs audit below.  Both checkpoints the result
-    # reads are retained until the next query entry.
+    # and the crossing-pairs audit below.
     pairs = pin(dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b"))
-    labels, star_edges = connected_components_star(
-        pairs, "doc_a", "doc_b"
+    labels = connected_components_star(pairs, "doc_a", "doc_b").select(
+        F.col("node").alias("doc_id"), "cluster_id"
     )
-    retain(star_edges)
-    labels = labels.select(F.col("node").alias("doc_id"), "cluster_id")
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     assigned = d.join(labels, "doc_id", "left").select(
         "doc_id",

@@ -14,7 +14,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from ondemand_dask_spark.operators.checkpoint import release_local_checkpoint
+from ondemand_dask_spark.operators.checkpoint import evict_all_retained
 from ondemand_dask_spark.operators.graphcc import connected_components_star
 
 
@@ -39,11 +39,11 @@ def _union_find_labels(edges: list[tuple[int, int]]) -> dict[int, int]:
 
 def _run(spark, edges: list[tuple[int, int]]) -> dict[int, int]:
     df = spark.createDataFrame(edges, ["src", "dst"])
-    labels, stars = connected_components_star(df)
+    labels = connected_components_star(df)
     got = {
         int(r["node"]): int(r["cluster_id"]) for r in labels.collect()
     }
-    assert release_local_checkpoint(stars)
+    evict_all_retained()
     return got
 
 
@@ -75,9 +75,9 @@ def test_random_graphs_match_union_find(spark):
 
 def test_self_loops_dropped(spark):
     df = spark.createDataFrame([(1, 1), (2, 3)], ["src", "dst"])
-    labels, stars = connected_components_star(df)
+    labels = connected_components_star(df)
     got = {int(r["node"]): int(r["cluster_id"]) for r in labels.collect()}
-    assert release_local_checkpoint(stars)
+    evict_all_retained()
     assert got == {2: 2, 3: 2}
 
 
@@ -88,5 +88,5 @@ def test_round_budget_raises_before_the_fixpoint(spark):
     df = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], ["src", "dst"]
     )
-    with pytest.raises(RuntimeError, match="within 2 contractions"):
+    with pytest.raises(RuntimeError, match="star contraction did not converge within 2 rounds"):
         connected_components_star(df, max_rounds=2)

@@ -14,10 +14,17 @@ import time
 
 import pytest
 
+import ondemand_dask_spark.queries.graph as graph_mod
 from ondemand_dask_spark.operators import quantile
 from ondemand_dask_spark.operators.checkpoint import evict_all_retained
+from ondemand_dask_spark.operators.graphcc import (
+    connected_components_minlabel,
+    connected_components_star,
+)
 from ondemand_dask_spark.registry import all_queries
 from tests.compare import assert_results_match
+from tests.test_graph_convergence import KCORE_TWO_ROUNDS
+from tests.test_graph_known_answers import _mini_lineitem
 
 # One registered query per storage site under queries/ (the operator
 # sites in operators/quantile.py and operators/rank.py ride along).
@@ -79,6 +86,26 @@ def test_evict_releases_query_storage(spark, sf_dir, name):
     assert not _still_stored(spark, created), (
         f"{name} left storage blocks that evict_all_retained cannot free"
     )
+
+
+@pytest.mark.parametrize("loop", ["star", "minlabel", "kcore"])
+def test_budget_raise_leaves_no_loop_storage(spark, tmp_path, monkeypatch, loop):
+    """A fixpoint loop that exhausts its round budget releases every
+    round it checkpointed before it raises: nothing is left for the
+    next query entry to find."""
+    monkeypatch.setattr(graph_mod, "_KCORE_ROUNDS", 1)
+    sf_dir = _mini_lineitem(tmp_path, KCORE_TWO_ROUNDS)
+    chain = spark.createDataFrame([(i, i + 1) for i in range(40)], ["src", "dst"])
+    evict_all_retained()
+    before = _stored(spark)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        if loop == "star":
+            connected_components_star(chain, max_rounds=2)
+        elif loop == "minlabel":
+            connected_components_minlabel(chain, max_rounds=3)
+        else:
+            all_queries()["graph_kcore"].fn(spark, sf_dir)
+    assert not _still_stored(spark, _stored(spark) - before)
 
 
 def test_forced_ranged_quantile_matches_oracle_and_holds_one_call(

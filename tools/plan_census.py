@@ -24,10 +24,11 @@ both against the live whitelists.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ondemand_dask_spark.plans import (  # noqa: E402
     broadcast_join_count,

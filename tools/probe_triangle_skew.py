@@ -21,10 +21,11 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql.window import Window  # noqa: E402
