@@ -34,8 +34,6 @@ import re
 import sys
 import time
 
-from pyspark.sql import functions as F
-
 SCRIPT_DIR = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, SCRIPT_DIR)
 
@@ -610,41 +608,28 @@ def main() -> None:
     # first flag raised by the phase-matched guard, and a true
     # positive — the guard working as intended on a deliberate
     # trade.
-    def calibrate() -> float:
+    #
+    # The start and end calibration pairs are tools/ab.py `calibrate`
+    # (one instrument with the A/B tool): the CPU-bound codegen sum,
+    # then a MEMORY-BANDWIDTH/shuffle-bound global sort of a stored
+    # 30M-row frame (shuffle write + fetch + sort, no scan, negligible
+    # arithmetic), each best of 3 after a warm-up.  The pure-CPU
+    # calib is documented above to under-correct bandwidth contention
+    # by 10-20% — exactly the sort/shuffle-heavy class the r7 guard
+    # flagged — so the guard below normalizes by the WORSE (larger)
+    # of the drift ratios.
+    sys.path.insert(0, os.path.join(SCRIPT_DIR, "tools"))
+    from ab import calibrate
+
+    def cpu_sample() -> float:
+        """One run of the CPU calib job: the mid-loop sample."""
         t0 = time.perf_counter()
         spark.range(1_000_000_000).selectExpr(
             "sum(CAST(id AS DOUBLE) * id) AS s"  # double: no ANSI overflow
         ).write.format("noop").mode("overwrite").save()
         return time.perf_counter() - t0
 
-    # Second calibration: a MEMORY-BANDWIDTH/shuffle-bound job (global
-    # sort of a cached 30M-row frame — shuffle write + fetch + sort,
-    # no scan, negligible codegen arithmetic).  The pure-CPU calib is
-    # documented above to under-correct bandwidth contention by
-    # 10-20% on this host — exactly the sort/shuffle-heavy class the
-    # r7 guard flagged — so the guard below normalizes by the WORSE
-    # (larger) of the two drift ratios.
-    def calibrate_bw() -> float:
-        bw_frame = spark.range(30_000_000).select(
-            F.xxhash64("id").alias("k")
-        ).persist()
-        bw_frame.count()  # materialize outside the timed region
-
-        def one() -> float:
-            t0 = time.perf_counter()
-            bw_frame.orderBy("k").write.format("noop").mode(
-                "overwrite"
-            ).save()
-            return time.perf_counter() - t0
-
-        one()  # warm
-        best = min(one() for _ in range(RUNS))
-        bw_frame.unpersist()  # release before any query is timed
-        return best
-
-    calibrate()  # warm
-    calib = round(min(calibrate() for _ in range(RUNS)), 4)
-    calib_bw = round(calibrate_bw(), 4)
+    calib, calib_bw = calibrate(spark)
 
     # Warm-up pass: JIT, code cache, file-system cache.
     for n in names:
@@ -656,21 +641,20 @@ def main() -> None:
     # ~0.3 s × ⌈|names|/10⌉ ≈ 2 s of overhead that makes a mid-run
     # host stall attributable from the artifact (the r13 blind spot).
     timings: dict[str, float] = {}
-    calib_series: list[float] = [round(calibrate(), 4)]
+    calib_series: list[float] = [round(cpu_sample(), 4)]
     for i, n in enumerate(names):
         timings[n] = round(min(run_once(n) for _ in range(RUNS)), 4)
         if (i + 1) % CALIB_EVERY == 0:
-            calib_series.append(round(calibrate(), 4))
+            calib_series.append(round(cpu_sample(), 4))
     if len(names) % CALIB_EVERY != 0:
-        calib_series.append(round(calibrate(), 4))
+        calib_series.append(round(cpu_sample(), 4))
 
     # Host speed is re-sampled AFTER the query loop: the r8 probes
     # measured a ±50% intra-hour swing in the CPU calib on an idle
     # VM, so a start-of-run sample alone can mis-state the speed the
     # later queries actually ran at (in either direction).  The
     # regression guard uses the most-lenient of the four ratios.
-    calib_end = round(min(calibrate() for _ in range(RUNS)), 4)
-    calib_bw_end = round(calibrate_bw(), 4)
+    calib_end, calib_bw_end = calibrate(spark)
 
     # Per-round isolated protocol on the most expensive headline queries (4 since the exact triangle census left for certificate class): a
     # FRESH session (the main one is stopped first so none of its
@@ -681,7 +665,6 @@ def main() -> None:
     isolated: dict = {}
     iso_names = [n for n in ISOLATED if n in queries]
     if iso_names:
-        sys.path.insert(0, os.path.join(SCRIPT_DIR, "tools"))
         from ab import measure as isolated_measure
 
         iso_spark = build_session(

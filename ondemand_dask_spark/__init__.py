@@ -16,7 +16,6 @@ from ondemand_dask_spark.operators import (
     OnDemandFrame,
     choose_quantile_path,
     exact_group_quantiles,
-    exact_group_quantiles_auto,
     from_spark,
     merge_asof,
     salted_agg,
@@ -35,7 +34,6 @@ __all__ = [
     "merge_asof",
     "choose_quantile_path",
     "exact_group_quantiles",
-    "exact_group_quantiles_auto",
     "salted_agg",
     "salted_join",
 ]

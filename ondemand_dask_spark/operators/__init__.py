@@ -6,7 +6,6 @@ from ondemand_dask_spark.operators.frame import OnDemandFrame, from_spark  # noq
 from ondemand_dask_spark.operators.quantile import (  # noqa: F401
     choose_quantile_path,
     exact_group_quantiles,
-    exact_group_quantiles_auto,
 )
 from ondemand_dask_spark.operators.rangejoin import bucketed_range_join  # noqa: F401
 from ondemand_dask_spark.operators.skew import salted_agg, salted_join  # noqa: F401

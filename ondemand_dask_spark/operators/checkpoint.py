@@ -87,7 +87,8 @@ def pin(df: DataFrame) -> DataFrame:
 
     Exception: where the first reader provably runs alone (an action
     on it completes before any other reader starts), the site keeps
-    `retain(x.localCheckpoint(eager=False))` with a one-line reason.
+    `retain(x.localCheckpoint(eager=False))` with a one-line reason
+    (the three operators/rank.py offsets builds and BFS `dist`).
     The lazy form still runs the frame's shuffle stages at the call
     and leaves only the last stage to that first reader, so an eager
     pin there would add a job and save nothing."""

@@ -196,11 +196,12 @@ def agg_quantile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sketch cutpoints differ per engine, so the banded oracle hashes
     the exact interpolated quantiles plus an in-query certificate
     that each approx cutpoint lands within 1% (relative) of exact.
-    The exact side comes from the distributed sort-based operator —
-    NOT `F.percentile`, which would collect whole groups into single
-    aggregation buffers and reintroduce exactly the OOM shape the
-    sketch exists to avoid; the certificate join broadcasts the
-    3-row exact table."""
+    The exact side comes from the distributed operator
+    `exact_group_quantiles` (its probe picks the sort or the ranged
+    path, as in agg_groupby_quantile) — NOT `F.percentile`, which
+    would collect whole groups into single aggregation buffers and
+    reintroduce exactly the OOM shape the sketch exists to avoid; the
+    certificate join broadcasts the 3-row exact table."""
     from ondemand_dask_spark.operators.quantile import exact_group_quantiles
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -352,9 +353,10 @@ def agg_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
     `F.percentile` here collects the single group's values into one
     aggregation buffer — acceptable for an interactive whole-frame
     summary, but at 100 TB swap the quartiles for
-    `exact_group_quantiles` (constant key) or `percentile_approx`;
-    the grouped queries already do (see agg_groupby_quantile /
-    agg_quantile_approx)."""
+    `exact_group_quantiles` (constant key: one group, so its probe
+    picks the ranged path once the frame passes ~1M rows on more
+    than two cores) or `percentile_approx`; the grouped queries
+    already do (see agg_groupby_quantile / agg_quantile_approx)."""
     c = F.col("o_totalprice")
     return load_table(spark, sf_dir, "orders").agg(
         F.count(c).alias("count"),
@@ -379,25 +381,25 @@ def agg_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_groupby_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ser.quantile(q) / groupby.quantile — exact percentile via the
-    distributed operator (operators/quantile.py): `F.percentile`
+    distributed operator `exact_group_quantiles`: `F.percentile`
     collects whole groups into single aggregation buffers (the 100 TB
     OOM shape); the sort path rank-interpolates over a per-group
-    window sort, and past the measured ~1M-rows-per-group knee the
-    auto probe switches to the RANGED path (range-partitioned
-    distributed rank — every group sorts at cluster width) with
-    identical quantile_cont semantics.  r15 removed the path='sort'
-    hint: the pinned hint kept the 3-group window sort at EVERY
-    scale, and the sf1 profile showed 13.6 s of the 14.7 s query in
-    one task with 31 cores idle; the probe (one scalar action over a
-    partial-agg count the sort path reuses) picks sort at the bench
-    SFs and ranged at sf1+ (13.5 → 4.5 s measured, identity-checked —
-    OPTIMIZATION_r15.md, "agg_groupby_quantile / agg_winsorize: ranged
-    path past the knee").  The sketch path is
+    window sort, and when the largest group passes ~1M rows AND more
+    than two cores' fair share of the rows, the probe switches to the
+    RANGED path (range-partitioned distributed rank — every group
+    sorts at cluster width) with identical quantile_cont semantics.
+    The sf1 profile on 32 cores showed 13.6 s of the 14.7 s query in
+    one window-sort task with 31 cores idle; ranged took it to 4.5 s
+    (OPTIMIZATION_r15.md, "agg_groupby_quantile / agg_winsorize:
+    ranged path past the knee").  On 4 cores the same three groups
+    already fill the machine and sort wins (9.8 s vs 12.5 s forced
+    ranged).  The probe is one scalar action that stores nothing; it
+    picks sort at the bench SFs.  The sketch path is
     `agg_quantile_approx`."""
-    from ondemand_dask_spark.operators.quantile import exact_group_quantiles_auto
+    from ondemand_dask_spark.operators.quantile import exact_group_quantiles
 
     li = load_table(spark, sf_dir, "lineitem")
-    qdf = exact_group_quantiles_auto(
+    qdf = exact_group_quantiles(
         li, ["l_returnflag"], "l_extendedprice",
         {"median_price": 0.5, "p90_price": 0.9},
     )
@@ -1388,20 +1390,18 @@ def agg_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winsorization (percentile clipping) per group — the outlier
     treatment a feature pipeline applies before scaling: values
     outside each group's [p05, p95] clamp to the cut.  Cutpoints come
-    from the distributed EXACT quantile operator (same quantile_cont
-    semantics as the oracle, no per-task group collection), come back
-    as a |groups|-row frame, and broadcast onto the fact scan — so
-    the whole treatment is the quantile sort + one broadcast-join
-    pass, no second wide shuffle.  Emits clip counts and the
-    before/after means as the audit summary."""
-    from ondemand_dask_spark.operators.quantile import exact_group_quantiles_auto
+    from the distributed EXACT quantile operator
+    `exact_group_quantiles` (same quantile_cont semantics as the
+    oracle, no per-task group collection; its probe picks the sort or
+    the ranged path, as in agg_groupby_quantile), come back as a
+    |groups|-row frame, and broadcast onto the fact scan — so the
+    whole treatment is the quantile sort + one broadcast-join pass,
+    no second wide shuffle.  Emits clip counts and the before/after
+    means as the audit summary."""
+    from ondemand_dask_spark.operators.quantile import exact_group_quantiles
 
     li = load_table(spark, sf_dir, "lineitem")
-    # r15: hint dropped with agg_groupby_quantile's — the probe picks
-    # sort at the bench SFs and the ranged path past the ~1M-row
-    # group knee (the pinned 'sort' serialized every group into one
-    # task at any scale).
-    cuts = exact_group_quantiles_auto(
+    cuts = exact_group_quantiles(
         li, ["l_returnflag"], "l_extendedprice",
         {"lo": 0.05, "hi": 0.95},
     )
@@ -1627,7 +1627,7 @@ def stat_kll_quantile_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     `kll_sketch_merge_double`, which is what a 100 TB rollup pipeline
     actually stores (per-shard sketches, merged at query time).
     k=2048 bounds rank error ≈ 0.4%; the banded oracle hashes the
-    exact quantiles (distributed sort-based operator, same as
+    exact quantiles (`exact_group_quantiles`, same as
     agg_quantile_approx — never F.percentile's group collection)
     plus a certificate that each sketch cutpoint lands within 2%
     relative of exact."""

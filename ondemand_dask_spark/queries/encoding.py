@@ -280,16 +280,17 @@ def encode_robust_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     alternative to z-scoring (StandardScaler's mean/std both move
     arbitrarily far under one corrupt value; median and IQR are
     50%-breakdown estimators).  The three quartiles come from the
-    distributed EXACT quantile operator in one pass (its probe picks
-    the window sort, or the ranged path past the ~1M-rows-per-group
-    knee, as in agg_groupby_quantile), come back |groups| rows wide,
+    distributed EXACT quantile operator `exact_group_quantiles` in one
+    pass (its probe picks the window sort, or the ranged path when
+    the largest group is both past ~1M rows and the critical path, as
+    in agg_groupby_quantile), come back |groups| rows wide,
     and broadcast onto the fact scan — identical shape to the other
     scalers: stats aggregate + broadcast transform, no second wide
     shuffle, no per-task value collection."""
-    from ondemand_dask_spark.operators.quantile import exact_group_quantiles_auto
+    from ondemand_dask_spark.operators.quantile import exact_group_quantiles
 
     li = load_table(spark, sf_dir, "lineitem")
-    cuts = exact_group_quantiles_auto(
+    cuts = exact_group_quantiles(
         li, ["l_returnflag"], "l_extendedprice",
         {"q1": 0.25, "med": 0.50, "q3": 0.75},
     )

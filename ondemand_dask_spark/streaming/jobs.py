@@ -148,10 +148,6 @@ def read_events_stream(
     to stream an arbitrary landing dir; `max_files_per_trigger=1`
     forces one micro-batch per file (multi-batch replays — how the
     incremental tests exercise cross-batch state)."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass  # only needed for NANOS-encoded files
     src = directory or _stream_dir(sf_dir)
     # Sniff the on-disk ts encoding via a batch schema read (footer
     # metadata only, no data scan) so the stream schema matches the

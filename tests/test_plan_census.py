@@ -28,7 +28,9 @@ probe actions by design, so the sweep stays cheap at the test SF.
 
 from __future__ import annotations
 
+import os
 import re
+import sys
 
 import pytest
 
@@ -190,8 +192,6 @@ def test_committed_census_artifacts_satisfy_the_structural_guards(
     pinned.  Strategy columns (xchg/bhj/smj) are deliberately NOT
     pinned across SFs — AQE broadcast↔SMJ flips with input size are
     the intended scale behavior."""
-    import os
-
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         artifact,
@@ -217,3 +217,22 @@ def test_committed_census_artifacts_satisfy_the_structural_guards(
                 f"{name}: unexpected Python boundary in {artifact}"
             )
     assert not violations, violations
+
+
+@pytest.mark.parametrize("artifact", ["PLANS.md", "PLANS_sf01.md"])
+def test_committed_census_is_of_the_current_engine(artifact):
+    """Each census artifact records the sha256 of the engine sources it
+    was taken of; any engine change without a regenerated census fails
+    here."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(root, "tools"))
+    from plan_census import engine_sha256
+
+    with open(os.path.join(root, artifact)) as fh:
+        m = re.search(
+            r"^Engine source sha256 .*: `([0-9a-f]{64})`$", fh.read(), re.M
+        )
+    assert m, f"{artifact} carries no engine-source sha256 line"
+    assert m.group(1) == engine_sha256(), (
+        f"{artifact} is stale: regenerate it with tools/plan_census.py"
+    )

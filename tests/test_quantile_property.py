@@ -13,12 +13,11 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from ondemand_dask_spark.operators import quantile
 from ondemand_dask_spark.operators.quantile import (
     MAX_ROWS_PER_SORT_TASK,
     choose_quantile_path,
     exact_group_quantiles,
-    exact_group_quantiles_auto,
-    exact_group_quantiles_ranged,
 )
 
 # (group label, value) rows; values quantized to avoid float-noise
@@ -34,25 +33,24 @@ _rows = st.lists(
 
 
 @pytest.mark.usefixtures("spark")
-@pytest.mark.parametrize(
-    "impl",
-    [
-        exact_group_quantiles,
-        exact_group_quantiles_ranged,
-    ],
-    ids=["sort", "ranged"],
-)
+@pytest.mark.parametrize("path", ["sort", "ranged"])
 @given(rows=_rows, q=st.sampled_from([0.0, 0.1, 0.25, 0.5, 0.9, 1.0]))
 @settings(
     max_examples=25,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-def test_exact_group_quantiles_matches_numpy(spark, impl, rows, q):
+def test_exact_group_quantiles_matches_numpy(spark, monkeypatch, path, rows, q):
+    # Both paths through the one entry point: the chooser is looked up
+    # on every call, so patching it forces the path.
+    calls = []
+    monkeypatch.setattr(
+        quantile, "choose_quantile_path", lambda *a: calls.append(a) or path
+    )
     pdf = pd.DataFrame(rows, columns=["k", "v"])
     sdf = spark.createDataFrame(pdf)
     got = (
-        impl(sdf, ["k"], "v", {"qv": q})
+        exact_group_quantiles(sdf, ["k"], "v", {"qv": q})
         .toPandas()
         .set_index("k")["qv"]
         .sort_index()
@@ -62,49 +60,40 @@ def test_exact_group_quantiles_matches_numpy(spark, impl, rows, q):
         .apply(lambda s: float(np.percentile(s, q * 100, method="linear")))
         .sort_index()
     )
+    assert calls, "exact_group_quantiles no longer consults the chooser"
     assert list(got.index) == list(exp.index)
     assert np.allclose(got.values, exp.values, rtol=1e-12, atol=1e-12)
 
 
 # ---------------------------------------------------------------------------
-# Auto path selection
+# Path selection
 # ---------------------------------------------------------------------------
 
 
 def test_choose_path_many_normal_groups_sorts():
     # per-tenant/per-day shape: millions of groups, none huge
-    assert choose_quantile_path(max_group_rows=50_000) == "sort"
-    assert choose_quantile_path(MAX_ROWS_PER_SORT_TASK) == "sort"  # boundary
+    assert choose_quantile_path(50_000, 10_000_000_000, 32) == "sort"
+    # the sf0.1 fixture: largest group 240k of 600k rows, on any host
+    for cores in (1, 4, 32, 1024):
+        assert choose_quantile_path(240_000, 600_000, cores) == "sort"
+    # boundary: at the per-task limit, even as the only group
+    cap = MAX_ROWS_PER_SORT_TASK
+    assert choose_quantile_path(cap, cap, 32) == "sort"
 
 
 def test_choose_path_few_huge_groups_ranged():
-    # 3 groups × ~30B rows: a one-task-per-group window sort
-    # serializes; the big-group path is the range-partitioned
-    # distributed rank (4.5 vs 13.5 s at generated sf1,
-    # OPTIMIZATION_r15.md)
-    assert choose_quantile_path(max_group_rows=30_000_000_000) == "ranged"
-    assert choose_quantile_path(MAX_ROWS_PER_SORT_TASK + 1) == "ranged"
+    # generated sf1 on 32 cores: largest group 2.4M of 6M rows is 12.8
+    # fair shares; ranged 4.5 s vs sort 13.5 s (OPTIMIZATION_r15.md)
+    assert choose_quantile_path(2_400_000, 6_000_000, 32) == "ranged"
+    cap = MAX_ROWS_PER_SORT_TASK
+    assert choose_quantile_path(cap + 1, 1_500_000, 4) == "ranged"
 
 
-def test_auto_dispatches_both_ways_and_stays_exact(spark):
-    pdf = pd.DataFrame(
-        {"k": ["a"] * 40 + ["b"] * 60, "v": [float(i) for i in range(100)]}
-    )
-    sdf = spark.createDataFrame(pdf)
-    exp = (
-        pdf.groupby("k")["v"]
-        .apply(lambda s: float(np.percentile(s, 50, method="linear")))
-        .sort_index()
-    )
-    for threshold in (10_000, 10):  # 10_000 → sort path; 10 → ranged path
-        got = (
-            exact_group_quantiles_auto(
-                sdf, ["k"], "v", {"qv": 0.5}, threshold=threshold
-            )
-            .toPandas()
-            .set_index("k")["qv"]
-            .sort_index()
-        )
-        assert np.allclose(got.values, exp.values, rtol=1e-12, atol=1e-12), (
-            threshold
-        )
+def test_choose_path_few_cores_sort_the_huge_groups():
+    # the same 2.4M of 6M rows on 4 cores is 1.6 fair shares: three
+    # group sorts already fill the machine (sort 10.59 s vs ranged
+    # 13.29 s measured); today's generated sf1 has 2.0M of 6.0M
+    assert choose_quantile_path(2_400_000, 6_000_000, 4) == "sort"
+    assert choose_quantile_path(2_001_121, 5_999_909, 4) == "sort"
+    # exactly two fair shares is not yet the critical path
+    assert choose_quantile_path(2_000_000, 4_000_000, 4) == "sort"

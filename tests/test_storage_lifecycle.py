@@ -3,13 +3,16 @@ behind is released by `evict_all_retained`, which the registry
 calls at every query entry — so a long session holds at most one
 query's storage blocks.
 
-The forced-ranged test also closes an oracle gap: the ranged quantile
-path sits past a ~1M-rows-per-group knee no test SF reaches, so the
-chooser (looked up on every call) is patched to pick it.
+The quantile tests cover every caller of `exact_group_quantiles` on
+both paths: the sort path, which the chooser picks at every test SF,
+stores nothing; the ranged path sits past a ~1M-rows-per-group knee no
+test SF reaches, so the chooser (looked up on every call) is patched
+to pick it, which also closes that path's oracle gap.
 """
 
 from __future__ import annotations
 
+import os
 import time
 
 import pytest
@@ -27,14 +30,13 @@ from tests.test_graph_convergence import KCORE_TWO_ROUNDS
 from tests.test_graph_known_answers import _mini_lineitem
 
 # One registered query per storage site under queries/ (the operator
-# sites in operators/quantile.py and operators/rank.py ride along).
+# sites in operators/rank.py ride along).
 SWEEP = [
     "tpch_q15",  # per-supplier revenue checkpoint
     "pipeline_leakage_free_split",  # pair-list + star checkpoints
     "ann_lsh_probe",  # signature-table checkpoint
     "ann_ivf_probe",  # list-assignment ranking checkpoint
     "text_tfidf_cosine_pairs",  # term-weight checkpoint
-    "agg_groupby_quantile",  # quantile probe's counts checkpoint
     "stat_spearman_corr",  # global_min_ranks checkpoints
     "sort_global_rank_scalable",  # global_row_numbers checkpoint
     "events_rfm_segmentation",  # three chained rank checkpoints
@@ -108,6 +110,37 @@ def test_budget_raise_leaves_no_loop_storage(spark, tmp_path, monkeypatch, loop)
     assert not _still_stored(spark, _stored(spark) - before)
 
 
+QUANTILE_CALLERS = [
+    "agg_groupby_quantile",
+    "agg_winsorize",
+    "encode_robust_scale",
+    "agg_quantile_approx",
+    "stat_kll_quantile_banded",
+]
+
+
+def test_quantile_sort_path_stores_nothing(spark, sf_dir, monkeypatch):
+    """Every caller reaches the chooser, which picks the sort path at
+    sf0.01, and neither the probe nor the sort path leaves a storage
+    block behind."""
+    chooser = quantile.choose_quantile_path
+    chosen = []
+    monkeypatch.setattr(
+        quantile,
+        "choose_quantile_path",
+        lambda *a: chosen.append(chooser(*a)) or chosen[-1],
+    )
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    evict_all_retained()
+    before = _stored(spark)
+    for name in QUANTILE_CALLERS:
+        all_queries()[name].fn(spark, sf001).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        assert not _stored(spark) - before, f"{name} stored blocks"
+    assert chosen == ["sort"] * len(QUANTILE_CALLERS)
+
+
 def test_forced_ranged_quantile_matches_oracle_and_holds_one_call(
     spark, duck, sf_dir, monkeypatch
 ):
@@ -118,10 +151,12 @@ def test_forced_ranged_quantile_matches_oracle_and_holds_one_call(
         lambda *a, **k: chosen.append(a) or "ranged",
     )
     qs = all_queries()
-    for name in ("agg_groupby_quantile", "agg_winsorize"):
+    for name in QUANTILE_CALLERS:
         got = qs[name].fn(spark, sf_dir).toPandas()
         assert_results_match(got, duck.execute(qs[name].oracle).fetchdf(), name)
-    assert len(chosen) == 2, "the auto dispatcher no longer consults the chooser"
+    assert len(chosen) == len(QUANTILE_CALLERS), (
+        "a caller no longer goes through exact_group_quantiles"
+    )
 
     before = _stored(spark)
     per_call = []

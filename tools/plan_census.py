@@ -19,16 +19,20 @@ regeneration target) and PLANS_sf01.md (sf0.1 — 100× the censused
 SF, plan construction only; pins that the structural guards are
 scale-invariant and that the only cross-SF deltas are AQE-intended
 broadcast↔SMJ strategy flips).  tests/test_plan_census.py guards
-both against the live whitelists.
+both against the live whitelists, and fails when PLANS.md's
+engine-source hash no longer matches the engine.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ondemand_dask_spark.plans import (  # noqa: E402
     broadcast_join_count,
@@ -45,6 +49,8 @@ from ondemand_dask_spark.session import build_session  # noqa: E402
 OUT = "PLANS.md"
 
 HEADER = """# PLANS — physical-plan census over every registered query
+
+Engine source sha256 (`ondemand_dask_spark/**/*.py`): `{engine_sha256}`
 
 Generated by `tools/plan_census.py` at {sf_dir} — regenerate after
 adding or reshaping operators; do not edit by hand.  Metrics come
@@ -73,6 +79,18 @@ CartesianProduct or a row-at-a-time BatchEvalPython.
 | query | xchg | bhj | smj | bnlj | cart | py | gwin | wscg |
 | --- | --- | --- | --- | --- | --- | --- | --- | --- |
 """
+
+
+def engine_sha256() -> str:
+    """sha256 over every engine source file's repo-relative path and
+    bytes, in sorted path order: names the code a census describes."""
+    h = hashlib.sha256()
+    pattern = os.path.join(ROOT, "ondemand_dask_spark", "**", "*.py")
+    for path in sorted(glob.glob(pattern, recursive=True)):
+        h.update(os.path.relpath(path, ROOT).encode())
+        with open(path, "rb") as fh:
+            h.update(fh.read())
+    return h.hexdigest()
 
 
 def census(sf_dir: str) -> list[dict]:
@@ -142,7 +160,11 @@ def main() -> None:
         f"unpartitioned-window queries: "
         f"{', '.join(with_gwin) or '(none)'}"
     )
-    lines = [HEADER.format(sf_dir=sf_dir, summary=summary)]
+    lines = [
+        HEADER.format(
+            sf_dir=sf_dir, engine_sha256=engine_sha256(), summary=summary
+        )
+    ]
     for r in ok:
         lines.append(
             f"| `{r['query']}` | {r['xchg']} | {r['bhj']} | {r['smj']} "
